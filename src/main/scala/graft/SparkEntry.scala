@@ -172,7 +172,7 @@ object SparkEntry {
 
   /** Temporarily zero the small-graph plan gates so the registered
     * join/stars variant queries execute the beyond-memory physical plans
-    * (runJoin / hop-join walks / cogroup backward / star contraction /
+    * (runJoin / hop-join walks / join backward / star contraction /
     * distributed PageRank) against the SAME oracles as the gated queries.
     * Safe to scope around the operator call: every iterative operator
     * runs its driver loop eagerly (each superstep is an action), and the

@@ -41,8 +41,10 @@ final class CheckpointStore(spark: SparkSession, root: String, runId: String) {
   }
 
   /** Write `state` for `superstep`, then commit the manifest atomically.
-    * Returns the re-read DataFrame — callers MUST continue from the return
-    * value so per-superstep lineage is truncated (SURVEY.md §4.2). */
+    * Returns the re-read DataFrame, which cuts the written plan's lineage
+    * (SURVEY.md §4.2) for a caller that continues from it — only Fora's
+    * walk-phase commit does; the push and PageRank loops commit from
+    * RDDs whose lineage `localCheckpoint` already truncates. */
   def commit(superstep: Int, state: DataFrame,
              scalars: Map[String, Double],
              partMetrics: Seq[graft.graph.PartMetrics],

@@ -146,9 +146,9 @@ final class LinkGraph private (
     * task, and a streaming packer cuts block rows at part boundaries —
     * identical blocks to the old adj→groupByKey→packCsr pipeline
     * (sorted srcIds, sorted dst slabs) at half the shuffles and one
-    * parquet write instead of two. No further repartition: every
-    * consumer (ForwardPush/BackwardPush cogroup) exchanges by its lambda
-    * key anyway, so cache partitioning of 32 fat rows buys nothing. */
+    * parquet write instead of two. No further repartition: the push and
+    * PageRank loops read it through [[csrZip]], which pins the blocks
+    * per part once, so cache partitioning of the table buys nothing. */
   lazy val csr: Dataset[CsrBlock] = preCsr.getOrElse(materialize(
     edges.toDF()
       .withColumn("part",

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 import org.apache.spark.storage.StorageLevel
 import graft.graph.LinkGraph
 import graft.util.Hashing
@@ -26,9 +25,6 @@ import graft.util.Hashing
   */
 object BackwardPush {
 
-  case class BRow(qid: Int, vid: Long, reserve: Double, residue: Double,
-                  delta: Boolean)
-  case class BState(qid: Int, vid: Long, reserve: Double, residue: Double)
   case class BCsr(part: Int, srcIds: Array[Long], offsets: Array[Int],
                   dsts: Array[Long], wts: Array[Double])
 
@@ -212,7 +208,7 @@ object BackwardPush {
 
   /** Run backward push to threshold rmax from each target (qid → t).
     * Dispatches to the packed-key broadcast fast path when the graph fits
-    * the broadcast budget, else the per-partition cogroup path. */
+    * the broadcast budget, else the per-partition pinned-CSR join path. */
   def run(graph: LinkGraph, targets: Map[Int, Long], alpha: Double,
           rmax: Double, maxSupersteps: Int = 10000): Result = {
     if (graph.numEdges <= ForwardPush.fastPathMaxEdges &&
@@ -384,97 +380,32 @@ object BackwardPush {
     localIt ++ remoteIt
   }
 
-  /** Per-partition pinned-CSR path (beyond broadcast memory). Round 6
-    * (guide §2.4/§1.2): the in-CSR sits once in inCsr's cached RDD
-    * (partition i = part i); each round routes ONLY the state rows with
-    * a PartIdPartitioner on Hashing.partOf — the same key the old
-    * cogroup grouped by — and zipPartitions feeds the identical per-part
-    * row multiset into the identical cascade (which sorts its input), so
-    * results are bitwise unchanged while each round exchanges frontier+
-    * state rows only, never the static CSR. `chainLen` rounds chain
-    * lazily in RDD lineage inside ONE job between localCheckpoint
-    * truncations — the same job-overhead amortization as before
-    * (VERDICT r4 #6) without the per-round Catalyst planning and
-    * multi-MB task binaries the chained cogroup paid. */
+  /** Per-partition pinned-CSR path (beyond broadcast memory): the
+    * backward cascade over the weighted in-CSR (inCsr, partition i =
+    * part i), driven by the forward join path's superstep loop
+    * (ForwardPush.joinSupersteps) — same batched exchange, same
+    * `chainLen` rounds per job between localCheckpoint truncations. */
   def runJoin(graph: LinkGraph, targets: Map[Int, Long], alpha: Double,
               rmax: Double, maxSupersteps: Int = 10000,
               chainLen: Int = 16): Result = {
-    val spark = graph.spark
-    import spark.implicits._
     val p = graph.numParts
-    val sc = spark.sparkContext
-    val csrZip = inCsr(graph)
-    val vpart = new graft.graph.LinkGraph.PartIdPartitioner(p)
-
-    // batched exchange (ForwardPush.StateBatch): the per-round shuffle
-    // moves primitive-array payloads, unpacked before the (unchanged,
-    // input-sorting) cascade — results bitwise identical
-    var state: org.apache.spark.rdd.RDD[(Int, ForwardPush.StateBatch)] =
-      sc.parallelize(ForwardPush.packByDest(
-        targets.toSeq.sortBy(_._1)
-          .map { case (q, v) => (q, v, 0.0, 1.0) }.iterator, p).toSeq, 1)
-    var pinned: Option[org.apache.spark.rdd.RDD[(Int, ForwardPush.StateBatch)]] =
-      None
-    var step = 0
-    var converged = false
-    var totalPushes = 0L
-    val chain = math.max(1, chainLen)
-
-    while (!converged && step < maxSupersteps) {
-      val rounds = math.min(chain, maxSupersteps - step)
-      val pushAccs = Array.tabulate(rounds)(r =>
-        sc.longAccumulator(s"bpushes_${step}_$r"))
-      val remoteAccs = Array.tabulate(rounds)(r =>
-        sc.longAccumulator(s"bremote_${step}_$r"))
-      var out = state
-      (0 until rounds).foreach { r =>
-        // sort-writer exchange (see ForwardPush.routeBatches): batch
-        // concat per dest — row multiset unchanged, cascade sorts
-        val routed = ForwardPush.routeBatches(out, vpart)
-        // capture only this round's accumulators (minimal task binary)
-        val pushAcc = pushAccs(r)
-        val remoteAcc = remoteAccs(r)
-        // preservesPartitioning MUST stay false — see ForwardPush.runJoin
-        out = routed.zipPartitions(csrZip, preservesPartitioning = false) {
-          (sIt, bIt) =>
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            ForwardPush.packByDest(
-              cascade(pid,
-                ForwardPush.unpackBatches(sIt)
-                  .map(t => BState(t._1, t._2, t._3, t._4)),
-                bIt.buffered.headOption, alpha, rmax, p,
-                pushAcc.add(_), remoteAcc.add(_))
-                .map(br => (br.qid, br.vid, br.reserve, br.residue)), p)
-        }
-      }
-      val ck = out.localCheckpoint()
-      ck.count() // materializes the epoch; accumulators final after this
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(ck)
-      state = ck
-      totalPushes += pushAccs.map(_.value.toLong).sum
-      // last chained round all-quiet ⇒ global fixpoint (see
-      // ForwardPush.runJoin)
-      converged = remoteAccs(rounds - 1).value == 0
-      step += rounds
+    val r = ForwardPush.joinSupersteps(graph.spark, p, inCsr(graph), targets,
+      maxSupersteps, chainLen, ckpt = None, resume = false, Map.empty) {
+      (part, rows, block, onPush, onRemote, _) =>
+        cascade(part, rows, block, alpha, rmax, p, onPush, onRemote)
     }
-    val finalState = spark.createDataset(
-        state.mapPartitions(it => ForwardPush.unpackBatches(it)
-          .map(t => BState(t._1, t._2, t._3, t._4)))).toDF()
-      .groupBy($"qid", $"vid")
-      .agg(sum($"reserve").as("reserve"), sum($"residue").as("residue"))
-    val rsum = finalState.agg(sum($"residue")).as[Double].head()
-    Result(finalState, rsum, step, totalPushes)
+    Result(r.state, r.rsum, r.supersteps, r.pushes)
   }
 
   /** Primitive-array rewrite of the boxed cascade (round 6 — see
     * ForwardPush.cascade's equivalence notes; the backward thresholds are
     * flat rmax and entries carry weights, otherwise the operation order
     * is reproduced identically, so results are bitwise unchanged). */
-  private def cascade(part: Int, states: Iterator[BState],
+  private def cascade(part: Int,
+                      states: Iterator[(Int, Long, Double, Double)],
                       block: Option[BCsr], alpha: Double, rmax: Double,
                       p: Int, onPush: Long => Unit, onRemote: Long => Unit)
-      : Iterator[BRow] = {
+      : Iterator[(Int, Long, Double, Double)] = {
     import graft.util.Prim
     val srcIds = block.map(_.srcIds).getOrElse(Array.empty[Long])
     val offsets = block.map(_.offsets).getOrElse(Array.empty[Int])
@@ -482,7 +413,7 @@ object BackwardPush {
     val wts = block.map(_.wts).getOrElse(Array.empty[Double])
 
     val in = new Prim.PairRows(256)
-    states.foreach(s => in.append(s.qid, s.vid, s.reserve, s.residue))
+    states.foreach { case (q, v, re, rs) => in.append(q, v, re, rs) }
     if (in.n == 0) { onPush(0L); onRemote(0L); return Iterator.empty }
     if (in.n > 1) Prim.sort4p(in.qids, in.vids, in.a, in.b, 0, in.n - 1)
 
@@ -582,11 +513,9 @@ object BackwardPush {
       Prim.sort4p(remote.qids, remote.vids, remote.a, remote.b, 0,
         remote.n - 1)
     Iterator.range(0, local.n).map(j =>
-      BRow(local.qids(j), local.vids(j), local.a(j), local.b(j),
-        delta = false)) ++
+      (local.qids(j), local.vids(j), local.a(j), local.b(j))) ++
       Iterator.range(0, remote.n).map(j =>
-        BRow(remote.qids(j), remote.vids(j), 0.0, remote.b(j),
-          delta = true))
+        (remote.qids(j), remote.vids(j), 0.0, remote.b(j)))
   }
 
   /** BiPPR pair query (SURVEY.md O16): π̂(s,t) = π°_t(s) +

@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import graft.graph.{CsrBlock, LinkGraph, PartMetrics}
 import graft.ckpt.CheckpointStore
 import graft.util.Hashing
@@ -44,14 +48,6 @@ import graft.util.Hashing
   */
 object ForwardPush {
 
-  /** One state row between supersteps; `delta=true` marks un-merged
-    * residue contributions emitted to a remote partition. */
-  case class PushRow(qid: Int, vid: Long, reserve: Double, residue: Double,
-                     delta: Boolean)
-
-  // not `private`: Catalyst encoder codegen can't access private classes
-  case class StateIn(qid: Int, vid: Long, reserve: Double, residue: Double)
-
   case class Result(state: DataFrame, // (qid, vid, reserve, residue)
                     rsum: Double, supersteps: Int, pushes: Long,
                     // fast-path handle: the partition-pinned state blocks
@@ -77,24 +73,6 @@ object ForwardPush {
     * per-partition CSR-join path (the 100 TB shape) runs instead. */
   var fastPathMaxEdges: Long = 20L * 1000 * 1000
 
-  /** Run forward push to threshold convergence.
-    *
-    * Dispatches to the broadcast-CSR fast path (compact keys, primitive
-    * cascade, chained shuffle rounds inside one job) when the graph fits
-    * the broadcast budget and no durable checkpointing is requested;
-    * otherwise the per-partition CSR-join path runs (one committed
-    * superstep per exchange — the shape that scales beyond memory).
-    *
-    * @param sources  qid → source vid
-    * @param rmax     push threshold scale: push while r(v) > rmax·max(deg,1)
-    * @param ckpt     optional durable checkpoint store (N9)
-    * @param resume   when true and `ckpt` has committed supersteps, continue
-    *                 from the latest manifest instead of the seeds
-    */
-  /** The packed-key fast path is sound only when every key fits
-    * qid<<40|vid: vids in [0, 2^40), qids in [0, 2^23). LinkGraph accepts
-    * arbitrary longs (the 10^12-key plan is xxhash64-as-vid), so guard
-    * here and fall back to the join path instead of corrupting keys. */
   /** State-partition count for the packed fast paths (forward AND
     * backward), content-derived from graph size — deliberately decoupled
     * from graph.numParts (which sizes the CSR block tables for the join
@@ -129,12 +107,31 @@ object ForwardPush {
       math.max(16, math.min(64, ((raw + 8) / 16) * 16))
     }
 
+  /** The packed-key fast path is sound only when every key fits
+    * qid<<40|vid: vids in [0, 2^40), qids in [0, 2^23). LinkGraph accepts
+    * arbitrary longs (the 10^12-key plan is xxhash64-as-vid), so guard
+    * here and fall back to the join path instead of corrupting keys. */
   private[ops] def packableKeys(graph: LinkGraph, sources: Map[Int, Long]): Boolean = {
     val (lo, hi) = graph.vidBounds
     lo >= 0 && hi < (1L << 40) &&
       sources.keys.forall(q => q >= 0 && q < (1 << 23))
   }
 
+  /** Run forward push to threshold convergence.
+    *
+    * Dispatches to the broadcast-CSR fast path (compact keys, primitive
+    * cascade, chained shuffle rounds inside one job) when the graph fits
+    * the broadcast budget and no durable checkpointing is requested;
+    * otherwise the per-partition CSR-join path runs (the shape that
+    * scales beyond memory; with `ckpt` it commits every superstep).
+    *
+    * @param sources  qid → source vid
+    * @param rmax     push threshold scale: push while r(v) > rmax·max(deg,1)
+    * @param ckpt     optional durable checkpoint store (N9)
+    * @param resume   when true and `ckpt` has committed supersteps, continue
+    *                 from the latest manifest instead of the seeds; ignored
+    *                 without a store
+    */
   def run(graph: LinkGraph, sources: Map[Int, Long], alpha: Double,
           rmax: Double, ckpt: Option[CheckpointStore] = None,
           resume: Boolean = false, maxSupersteps: Int = 10000,
@@ -200,17 +197,6 @@ object ForwardPush {
           key.asInstanceOf[Long] & VidMask, 42), p)
   }
 
-  /** Routes a packed key by its QID — the multi-source sharding of the
-    * small-graph fast-path regime (see runFastK's qidShard). Content-
-    * derived (qid is content), never parallelism-derived. */
-  private[ops] final class QidPartitioner(p: Int)
-      extends org.apache.spark.Partitioner {
-    override def numPartitions: Int = p
-    override def getPartition(key: Any): Int =
-      java.lang.Math.floorMod(
-        (key.asInstanceOf[Long] >>> 40).toInt, p)
-  }
-
   /** Whole-partition push state as primitive arrays, key-sorted. One
     * StateBlock per partition lives in the RDD cache BY REFERENCE
     * (deserialized MEMORY_ONLY) — no per-row boxing, no serialization,
@@ -234,8 +220,9 @@ object ForwardPush {
     * the wire are frontier deltas. `chainLen` rounds chain inside one
     * job between lineage truncations, as before. Partition routing
     * (VidPartitioner = the cascade's own local/remote test) is
-    * content-derived, so results are parallelism-independent. */
-  /** @param qidShard opt-in multi-source sharding for the SMALL-graph
+    * content-derived, so results are parallelism-independent.
+    *
+    * @param qidShard opt-in multi-source sharding for the SMALL-graph
     * regime (fastStateParts == 1): a batch of q sources otherwise runs
     * its q independent cascades serially inside the single state task.
     * Sharding routes state by QID instead of vid, so each source's whole
@@ -587,9 +574,10 @@ object ForwardPush {
   }
 
   /** Per-partition CSR-join path (scales beyond broadcast memory;
-    * supports durable per-superstep checkpoint + resume).
+    * supports durable per-superstep checkpoint + resume): the forward
+    * cascade over LinkGraph.csrZip, driven by [[joinSupersteps]].
     *
-    * @param chainLen cogroup rounds chained lazily inside ONE job between
+    * @param chainLen rounds chained lazily inside ONE job between
     *   lineage truncations when no checkpoint store is attached — the
     *   same job-overhead amortization as the fast path's chained rounds
     *   (driver/job latency was ~0.25 s/superstep on the toy verification
@@ -600,41 +588,82 @@ object ForwardPush {
               rmax: Double, ckpt: Option[CheckpointStore] = None,
               resume: Boolean = false, maxSupersteps: Int = 10000,
               chainLen: Int = 16): Result = {
-    if (ckpt.isDefined)
-      return runJoinDurable(graph, sources, alpha, rmax, ckpt, resume,
-        maxSupersteps, chainLen)
-    val spark = graph.spark
-    import spark.implicits._
     val p = graph.numParts
+    joinSupersteps(graph.spark, p, graph.csrZip, sources, maxSupersteps,
+      chainLen, ckpt, resume, Map("alpha" -> alpha.toString,
+        "rmax" -> rmax.toString, "numParts" -> p.toString)) {
+      (part, rows, block, onPush, onRemote, onMetrics) =>
+        cascade(part, rows, block, alpha, rmax, p, onPush, onRemote,
+          onMetrics)
+    }
+  }
+
+  /** One part's cascade on the join path: (part, that part's unmerged
+    * (qid, vid, reserve, residue) rows, its pinned CSR block, push /
+    * remote-delta / per-part metrics sinks) → output rows, local ones
+    * and remote deltas alike. */
+  private[ops] type JoinCascade[B] = (Int, Iterator[(Int, Long, Double, Double)],
+    Option[B], Long => Unit, Long => Unit, PartMetrics => Unit) =>
+    Iterator[(Int, Long, Double, Double)]
+
+  /** The superstep driver loop of the join path, shared by forward push
+    * (over csrZip) and backward push (over the weighted in-CSR).
+    *
+    * Pinned-CSR formulation (round 6, guide §2.4 / §1.2): the CSR blocks
+    * sit ONCE in `csrZip`'s cache, partition i = content part i; each
+    * round routes ONLY the state rows with a PartIdPartitioner on
+    * Hashing.partOf(vid, p) and zipPartitions feeds each part's row
+    * multiset into its cascade (which sorts its input), so a round costs
+    * ONE shuffle of frontier+state rows and the static CSR is never
+    * re-exchanged. Rounds chain lazily in RDD lineage inside one job per
+    * epoch, then a localCheckpoint truncates.
+    *
+    * Durability (N9): with a store attached the chain is 1 and every
+    * superstep k commits its unmerged (qid, vid, reserve, residue) rows
+    * as manifest v<k>, with the running push total and per-part
+    * PartMetrics, AFTER the epoch's localCheckpoint has materialized —
+    * so the accumulators are final before the manifest reads them.
+    * `resume` continues from the latest manifest: its rows re-enter the
+    * exchange through packByDest, and since the cascade sorts its input
+    * the next superstep sees the identical row multiset — a resumed run
+    * is bitwise equal to the uninterrupted one. */
+  private[ops] def joinSupersteps[B: ClassTag](spark: SparkSession, p: Int,
+      csrZip: RDD[B], seeds: Map[Int, Long], maxSupersteps: Int,
+      chainLen: Int, ckpt: Option[CheckpointStore], resume: Boolean,
+      params: Map[String, String])(cascade: JoinCascade[B]): Result = {
+    import spark.implicits._
     val sc = spark.sparkContext
-    // The state exchange, pinned-CSR formulation (round 6, guide §2.4 /
-    // §1.2): the CSR blocks sit ONCE in csrZip's cache, partition i =
-    // content part i; each round routes ONLY the state rows with a
-    // PartIdPartitioner on Hashing.partOf(vid, p) — the exact key the
-    // cogroup used — and zipPartitions feeds the identical per-part row
-    // multiset into the identical cascade (which sorts its input), so
-    // results are bitwise unchanged while each round costs ONE shuffle
-    // of frontier+state rows instead of a Catalyst cogroup that
-    // re-exchanged the whole static CSR and shipped a multi-MB task
-    // binary per stage. Rounds chain lazily in RDD lineage inside one
-    // job per epoch, then a localCheckpoint truncates.
-    val vpart = new graft.graph.LinkGraph.PartIdPartitioner(p)
-    val csrZip = graph.csrZip
-    val noMetrics: graft.graph.PartMetrics => Unit = _ => ()
-    var state: org.apache.spark.rdd.RDD[(Int, StateBatch)] = sc.parallelize(
-      packByDest(sources.toSeq.sortBy(_._1)
-        .map { case (q, v) => (q, v, 0.0, 1.0) }.iterator, p).toSeq, 1)
-    var pinned: Option[org.apache.spark.rdd.RDD[(Int, StateBatch)]] = None
-    var step = 0
-    var converged = false
-    var totalPushes = 0L
+    val vpart = new LinkGraph.PartIdPartitioner(p)
+    val resumeStep = if (resume) ckpt.flatMap(_.latestSuperstep()) else None
+    var state: RDD[(Int, StateBatch)] = resumeStep match {
+      case Some(k) =>
+        ckpt.get.loadState(k).select($"qid", $"vid", $"reserve", $"residue")
+          .as[(Int, Long, Double, Double)].rdd
+          .mapPartitions(packByDest(_, p))
+      case None =>
+        sc.parallelize(packByDest(seeds.toSeq.sortBy(_._1)
+          .map { case (q, v) => (q, v, 0.0, 1.0) }.iterator, p).toSeq, 1)
+    }
+    var pinned: Option[RDD[(Int, StateBatch)]] = None
+    var step = resumeStep.fold(0)(_ + 1)
+    var totalPushes = resumeStep
+      .flatMap(ckpt.get.scalar(_, "totalPushes")).fold(0L)(_.toLong)
+    // a commit whose superstep sent no remote delta is the fixpoint: a
+    // run resumed from it has nothing left to push
+    var converged = resumeStep
+      .flatMap(ckpt.get.scalar(_, "remoteDeltas")).contains(0.0)
+    val chain = if (ckpt.isDefined) 1 else math.max(1, chainLen)
 
     while (!converged && step < maxSupersteps) {
-      val rounds = math.min(math.max(1, chainLen), maxSupersteps - step)
+      val rounds = math.min(chain, maxSupersteps - step)
       val pushAccs = Array.tabulate(rounds)(r =>
         sc.longAccumulator(s"pushes_${step}_$r"))
       val remoteAccs = Array.tabulate(rounds)(r =>
         sc.longAccumulator(s"remoteDeltas_${step}_$r"))
+      val metricsAcc =
+        ckpt.map(_ => sc.collectionAccumulator[PartMetrics](s"metrics_$step"))
+      val onMetrics: PartMetrics => Unit =
+        metricsAcc.fold[PartMetrics => Unit](_ => ())(acc => acc.add(_))
       var out = state
       (0 until rounds).foreach { r =>
         val routed = routeBatches(out, vpart)
@@ -648,13 +677,9 @@ object ForwardPush {
         // the next partitionBy(vpart) short-circuit the exchange
         out = routed.zipPartitions(csrZip, preservesPartitioning = false) {
           (sIt, bIt) =>
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            packByDest(
-              cascade(pid,
-                unpackBatches(sIt).map(t => StateIn(t._1, t._2, t._3, t._4)),
-                bIt.buffered.headOption, alpha, rmax, p,
-                pushAcc.add(_), remoteAcc.add(_), noMetrics)
-                .map(pr => (pr.qid, pr.vid, pr.reserve, pr.residue)), p)
+            packByDest(cascade(TaskContext.getPartitionId(),
+              unpackBatches(sIt), bIt.buffered.headOption,
+              pushAcc.add(_), remoteAcc.add(_), onMetrics), p)
         }
       }
       val ck = out.localCheckpoint()
@@ -663,19 +688,32 @@ object ForwardPush {
       pinned = Some(ck)
       state = ck
       totalPushes += pushAccs.map(_.value.toLong).sum
-      // same convergence rule as before: last chained round all-quiet ⇒
-      // every partition reached local quiescence with nothing in flight
-      converged = remoteAccs(rounds - 1).value == 0
+      // last chained round all-quiet ⇒ every partition reached local
+      // quiescence with nothing in flight ⇒ global fixpoint (an earlier
+      // all-quiet round makes the remaining chained rounds no-op
+      // re-shuffles, so the last round's count is the authoritative one)
+      val remote = remoteAccs(rounds - 1).value
+      for (store <- ckpt; acc <- metricsAcc)
+        store.commit(step, rowsOf(spark, ck),
+          Map("totalPushes" -> totalPushes.toDouble,
+            "remoteDeltas" -> remote.toDouble),
+          acc.value.asScala.toSeq, params)
+      converged = remote == 0
       step += rounds
     }
 
-    val finalState = spark.createDataset(
-        state.mapPartitions(it => unpackBatches(it)
-          .map(t => StateIn(t._1, t._2, t._3, t._4)))).toDF()
-      .groupBy($"qid", $"vid")
+    val finalState = rowsOf(spark, state).groupBy($"qid", $"vid")
       .agg(sum($"reserve").as("reserve"), sum($"residue").as("residue"))
     val rsum = finalState.agg(sum($"residue")).as[Double].head()
     Result(finalState, rsum, step, totalPushes)
+  }
+
+  /** Unmerged (qid, vid, reserve, residue) rows of a batched state RDD. */
+  private def rowsOf(spark: SparkSession, state: RDD[(Int, StateBatch)])
+      : DataFrame = {
+    import spark.implicits._
+    spark.createDataset(state.mapPartitions(unpackBatches))
+      .toDF("qid", "vid", "reserve", "residue")
   }
 
   /** Primitive-array batch of state rows for one destination part of
@@ -695,7 +733,7 @@ object ForwardPush {
     * its input by (qid, vid, reserve, residue) before any accumulation,
     * so any concatenation order yields the same multiset and therefore
     * bitwise-identical results. */
-  private[ops] def concatBatches(x: StateBatch, y: StateBatch): StateBatch = {
+  private def concatBatches(x: StateBatch, y: StateBatch): StateBatch = {
     val n = x.vids.length + y.vids.length
     val q = java.util.Arrays.copyOf(x.qids, n)
     System.arraycopy(y.qids, 0, q, x.qids.length, y.qids.length)
@@ -717,7 +755,7 @@ object ForwardPush {
     * ONE data + index file per map task — and merely concatenates
     * batches per destination (row multiset unchanged ⇒ results bitwise
     * unchanged; see concatBatches). */
-  private[ops] def routeBatches(
+  private def routeBatches(
       rdd: org.apache.spark.rdd.RDD[(Int, StateBatch)],
       vpart: org.apache.spark.Partitioner)
       : org.apache.spark.rdd.RDD[(Int, StateBatch)] = {
@@ -730,7 +768,7 @@ object ForwardPush {
   /** Group (qid, vid, reserve, residue) rows into one StateBatch per
     * destination part (dest = the cascade's own routing key
     * Hashing.partOf(vid, p) — local rows already live at theirs). */
-  private[ops] def packByDest(rows: Iterator[(Int, Long, Double, Double)],
+  private def packByDest(rows: Iterator[(Int, Long, Double, Double)],
                               p: Int): Iterator[(Int, StateBatch)] = {
     val qb = new Array[mutable.ArrayBuilder.ofInt](p)
     val vb = new Array[mutable.ArrayBuilder.ofLong](p)
@@ -751,100 +789,12 @@ object ForwardPush {
         sb(d).result())))
   }
 
-  private[ops] def unpackBatches(it: Iterator[(Int, StateBatch)])
+  private def unpackBatches(it: Iterator[(Int, StateBatch)])
       : Iterator[(Int, Long, Double, Double)] =
     it.flatMap { case (_, b) =>
       Iterator.range(0, b.vids.length).map(i =>
         (b.qids(i), b.vids(i), b.reserves(i), b.residues(i)))
     }
-
-  /** Durable-checkpoint variant of the join path (north rule N9): the
-    * original Dataset cogroup loop, chain forced to 1 so every superstep
-    * commits via the CheckpointStore and resume can restart from any
-    * committed manifest. */
-  private def runJoinDurable(graph: LinkGraph, sources: Map[Int, Long],
-              alpha: Double, rmax: Double, ckpt: Option[CheckpointStore],
-              resume: Boolean, maxSupersteps: Int,
-              chainLen: Int): Result = {
-    val spark = graph.spark
-    import spark.implicits._
-    val p = graph.numParts
-    val sc = spark.sparkContext
-
-    val resumeStep = if (resume) ckpt.flatMap(_.latestSuperstep()) else None
-    var state: DataFrame = resumeStep match {
-      case Some(k) => ckpt.get.loadState(k)
-      case None =>
-        sources.toSeq.sortBy(_._1)
-          .map { case (q, v) => PushRow(q, v, 0.0, 1.0, delta = true) }
-          .toDF()
-    }
-    var step = resumeStep.map(_ + 1).getOrElse(0)
-    var converged = false
-    var totalPushes = resumeStep.flatMap(k => ckpt.get.scalar(k, "totalPushes"))
-      .getOrElse(0.0).toLong
-    val chain = if (ckpt.isDefined) 1 else math.max(1, chainLen)
-
-    val csrDS = graph.csr // persisted, hash-partitioned by part
-
-    while (!converged && step < maxSupersteps) {
-      val rounds = math.min(chain, maxSupersteps - step)
-      val pushAccs = Array.tabulate(rounds)(r =>
-        sc.longAccumulator(s"pushes_${step}_$r"))
-      val remoteAccs = Array.tabulate(rounds)(r =>
-        sc.longAccumulator(s"remoteDeltas_${step}_$r"))
-      val metricsAcc = sc.collectionAccumulator[PartMetrics](s"metrics_$step")
-
-      // COGROUP, not groupBy(part).agg(collect_list): round 1 packed a
-      // partition's whole state into ONE array row — a hub-heavy part
-      // hits the 2 GB row limit at scale. CoGroup streams both sides'
-      // rows per key; only the cascade's own working set is in memory.
-      var out = state
-      (0 until rounds).foreach { r =>
-        out = out.as[StateIn]
-          .groupByKey(row => Hashing.partOf(row.vid, p))
-          .cogroup(csrDS.groupByKey(_.part)) { (part, sIt, cIt) =>
-            cascade(part, sIt, cIt.buffered.headOption, alpha, rmax, p,
-              pushAccs(r).add(_), remoteAccs(r).add(_), metricsAcc.add(_))
-          }.toDF()
-      }
-
-      // eager checkpoint FIRST: it runs the superstep job, so the
-      // accumulators below are final before the manifest reads them
-      // (round-1 bug: commit args evaluated pre-job → partitions:[] and
-      // totalPushes one superstep behind in every manifest)
-      val eager = out.localCheckpoint(true)
-      val epochPushes = pushAccs.map(_.value.toLong).sum
-      val committed = ckpt match {
-        case Some(store) =>
-          store.commit(step, eager,
-            Map("totalPushes" -> (totalPushes + epochPushes).toDouble),
-            metricsList(metricsAcc), Map("alpha" -> alpha.toString,
-              "rmax" -> rmax.toString, "numParts" -> p.toString))
-        case None => eager
-      }
-      state = committed
-      totalPushes += epochPushes
-      // no remote residue emitted in the LAST chained round ⇒ every
-      // partition reached local quiescence with nothing in flight ⇒
-      // global fixpoint (an earlier all-quiet round makes the remaining
-      // chained rounds no-op re-shuffles, so the last round's count is
-      // the authoritative one)
-      converged = remoteAccs(rounds - 1).value == 0
-      step += rounds
-    }
-
-    val finalState = state.groupBy($"qid", $"vid")
-      .agg(sum($"reserve").as("reserve"), sum($"residue").as("residue"))
-    val rsum = finalState.agg(sum($"residue")).as[Double].head()
-    Result(finalState, rsum, step, totalPushes)
-  }
-
-  private def metricsList(acc: org.apache.spark.util.CollectionAccumulator[PartMetrics])
-      : Seq[PartMetrics] = {
-    import scala.jdk.CollectionConverters._
-    acc.value.asScala.toSeq
-  }
 
   /** Sequential, deterministic push cascade within one partition.
     *
@@ -864,18 +814,19 @@ object ForwardPush {
     *   - output local-then-remote, each sorted by (qid, vid).
     * Results are bitwise unchanged (join-vs-fast path equivalence spec +
     * the g_ppr_join / b_push_join oracles pin this). */
-  private def cascade(part: Int, states: Iterator[StateIn],
+  private def cascade(part: Int,
+                      states: Iterator[(Int, Long, Double, Double)],
                       block: Option[CsrBlock], alpha: Double, rmax: Double,
                       p: Int, onPush: Long => Unit,
                       onRemote: Long => Unit, onMetrics: PartMetrics => Unit)
-      : Iterator[PushRow] = {
+      : Iterator[(Int, Long, Double, Double)] = {
     import graft.util.Prim
     val srcIds = block.map(_.srcIds).getOrElse(Array.empty[Long])
     val offsets = block.map(_.offsets).getOrElse(Array.empty[Int])
     val dsts = block.map(_.dsts).getOrElse(Array.empty[Long])
 
     val in = new Prim.PairRows(256)
-    states.foreach(s => in.append(s.qid, s.vid, s.reserve, s.residue))
+    states.foreach { case (q, v, re, rs) => in.append(q, v, re, rs) }
     if (in.n == 0) { // CSR-only part with no state this superstep
       onPush(0L); onRemote(0L)
       return Iterator.empty
@@ -993,16 +944,15 @@ object ForwardPush {
       Prim.sort4p(remote.qids, remote.vids, remote.a, remote.b, 0,
         remote.n - 1)
     Iterator.range(0, local.n).map(j =>
-      PushRow(local.qids(j), local.vids(j), local.a(j), local.b(j),
-        delta = false)) ++
+      (local.qids(j), local.vids(j), local.a(j), local.b(j))) ++
       Iterator.range(0, remote.n).map(j =>
-        PushRow(remote.qids(j), remote.vids(j), 0.0, remote.b(j),
-          delta = true))
+        (remote.qids(j), remote.vids(j), 0.0, remote.b(j)))
   }
 
   /** Deterministic PPR to additive tolerance `tol` (SURVEY.md O17 note):
-    * rmax = tol/(m+n) ⇒ per-vertex |π̂−π| ≤ rsum ≤ tol. */
-  /** @param qidShard see runFastK — opt-in ONLY for callers that never
+    * rmax = tol/(m+n) ⇒ per-vertex |π̂−π| ≤ rsum ≤ tol.
+    *
+    * @param qidShard see runFastK — opt-in ONLY for callers that never
     * consume Result.rsum (the cross-qid fold order changes). */
   def deterministicPpr(graph: LinkGraph, sources: Map[Int, Long],
                        alpha: Double = 0.2, tol: Double = 1e-7,

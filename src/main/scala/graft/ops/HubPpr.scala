@@ -33,9 +33,10 @@ import graft.graph.LinkGraph
   * Scale note: this object is the broadcast-fast-path form (gated by
   * ForwardPush.run's own fast-path conditions via runFastK's packed
   * keys). At beyond-memory scale the identical artifact already exists
-  * as an N9 checkpoint: runJoin + CheckpointStore persists per-superstep
-  * (reserve, residue) state per source and resumes from it —
-  * hub indexing there is "keep the hubs' checkpoints" — so no second
+  * as an N9 checkpoint: ForwardPush.runJoin with a CheckpointStore
+  * commits every superstep's unmerged (qid, vid, reserve, residue) rows
+  * from its pinned-CSR loop and resumes from the latest commit — hub
+  * indexing there is "keep the hubs' checkpoints" — so no second
   * join-path implementation is warranted.
   */
 object HubPpr {

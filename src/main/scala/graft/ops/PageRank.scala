@@ -11,18 +11,20 @@ import graft.ckpt.CheckpointStore
   * to d=0.8 — caller's choice); dangling mass redistributed uniformly over
   * all n vertices each iteration; scores sum to 1.
   *
-  * Plan shape per iteration (measured — see git history for the
-  * alternatives that lost):
-  *   - ranks ⋈ adj (cached parquet-backed, hash-partitioned) → explode →
-  *     groupBy(vid) partial+final agg: the ONE row-level shuffle;
-  *   - dangling mass read off the aggregated contribs as 1 − Σcontrib
-  *     (Σrank = 1 invariant) via a one-row broadcast cross-join — no
-  *     second scan of the ranks and no extra driver action;
-  *   - lineage truncated EVERY iteration (localCheckpoint): chaining k
-  *     iterations multiplies AQE query stages ~3× per step (measured
-  *     8→24→220 stages for k=1,2,5), so eager truncation is faster;
+  * Two physical plans, chosen by size (measured — see git history for
+  * the alternatives that lost):
+  *   - dense ([[runDense]]): up to [[DenseMaxVertices]] vertices every
+  *     iteration runs inside ONE executor task against the broadcast
+  *     CSR — one Spark job in total;
+  *   - distributed ([[runJoinRdd]]): rank blocks pinned per content part
+  *     next to LinkGraph.csrZip; per iteration ONE two-stage job routes
+  *     per-part contribution arrays to their destination part (the one
+  *     row-level exchange) and a driver fold of per-part partial sums
+  *     gives the dangling mass 1 − Σcontrib (Σrank = 1 invariant). With
+  *     a CheckpointStore attached this plan runs at any size and commits
+  *     at every convergence check;
   *   - convergence (L∞ between consecutive iterations) tested every
-  *     `checkEvery` iterations to amortize the compare join.
+  *     `checkEvery` iterations to amortize the compare.
   *
   * Convergence: the iteration contracts by d per step, so per-iteration
   * L∞ delta < tol implies true error ≤ tol·d/(1−d); tol=1e-8 clears the
@@ -37,96 +39,54 @@ object PageRank {
     * ~100 iterations × m edge-ops ≈ tens of ms at the gate) while the
     * distributed path pays ~1 fixed-cost job per iteration — two orders
     * of magnitude in wall time on a 1000-vertex community block. The
-    * per-iteration join+agg path below remains the unconditional plan
-    * for real graphs (its per-superstep cost scales with cores; see
-    * BENCH/BASELINE.md pagerank20). */
+    * distributed plan remains the unconditional plan for real graphs
+    * (its per-iteration cost scales with cores; see BENCH/BASELINE.md
+    * pagerank20). */
   private[graft] var DenseMaxVertices = 65536L // var: specs force the join path
 
+  /** Power iteration to L∞ delta ≤ `tol` (or `maxIter` iterations).
+    * Small graphs without a store run the dense one-task plan; everything
+    * else runs the distributed plan ([[runJoinRdd]]).
+    *
+    * @param ckpt   optional durable checkpoint store (N9): the distributed
+    *               plan commits (vid, rank) at every convergence check
+    * @param resume when true and `ckpt` has commits, continue from the
+    *               latest one instead of the uniform start; ignored
+    *               without a store
+    */
   def run(graph: LinkGraph, damping: Double = 0.85, tol: Double = 1e-8,
           maxIter: Int = 300, checkEvery: Int = 5,
           ckpt: Option[CheckpointStore] = None,
-          resume: Boolean = false): Result = {
-    if (ckpt.isEmpty && !resume && graph.numVertices <= DenseMaxVertices &&
+          resume: Boolean = false): Result =
+    if (ckpt.isEmpty && graph.numVertices <= DenseMaxVertices &&
         graph.numEdges <= ForwardPush.fastPathMaxEdges)
-      return runDense(graph, damping, tol, maxIter, checkEvery)
-    if (ckpt.isEmpty && !resume)
-      return runJoinRdd(graph, damping, tol, maxIter, checkEvery)
-    val spark = graph.spark
-    import spark.implicits._
-    val n = graph.numVertices
-    val adj = graph.adj
-    val base = graph.outDegrees // (vid, outDeg) persisted parquet-backed
+      runDense(graph, damping, tol, maxIter, checkEvery)
+    else runJoinRdd(graph, damping, tol, maxIter, checkEvery, ckpt, resume)
 
-    val resumeStep = if (resume) ckpt.flatMap(_.latestSuperstep()) else None
-    var ranks: DataFrame = resumeStep match {
-      case Some(k) => ckpt.get.loadState(k)
-      case None => base.withColumn("rank", lit(1.0 / n))
-    }
-    var iter = resumeStep.map(_ + 1).getOrElse(0)
-    var delta = Double.MaxValue
-
-    def step(r: DataFrame): DataFrame = {
-      // materialize contribs ONCE: the round-1 broadcast-subquery form
-      // re-executed the explode+shuffle subtree a second time for the
-      // dangling-mass scalar. The csum scalar is now read off the
-      // CHECKPOINTED contribs with a driver head() (a trivial job over
-      // ~n cached rows) and folded in as a literal: same IEEE ops in
-      // the same order as the old (1 − csum)/n column expression, but
-      // the per-iteration BroadcastExchange + crossJoin — a 2nd job
-      // plus most of the multi-MiB per-stage task binary — is gone
-      // (round 6, guide §7.2: duplicated/oversized plan subtrees).
-      val contribs = r.where($"outDeg" > 0)
-        .join(adj, r("vid") === adj("src"))
-        .select(explode($"dsts").as("vid"), ($"rank" / $"outDeg").as("c"))
-        .groupBy($"vid").agg(sum($"c").as("contrib"))
-        .localCheckpoint(true)
-      val spark = contribs.sparkSession
-      import spark.implicits._
-      val csum = contribs
-        .agg(coalesce(sum($"contrib"), lit(0.0))).as[Double].head()
-      base.join(contribs, Seq("vid"), "left")
-        .select($"vid", $"outDeg",
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (lit((1.0 - csum) / n) +
-              coalesce($"contrib", lit(0.0)))).as("rank"))
-    }
-
-    while (delta > tol && iter < maxIter) {
-      val prev = ranks
-      ranks = step(ranks)
-      iter += 1
-      if (iter % checkEvery == 0 || iter >= maxIter) {
-        delta = ranks.as("n")
-          .join(prev.as("o"), col("n.vid") === col("o.vid"))
-          .agg(max(abs(col("n.rank") - col("o.rank")))).as[Double].head()
-        ckpt.foreach { store =>
-          ranks = store.commit(iter, ranks, Map("delta" -> delta),
-            Seq.empty,
-            Map("damping" -> damping.toString, "tol" -> tol.toString))
-        }
-      }
-    }
-    Result(ranks.select($"vid", $"rank"), iter, delta)
-  }
-
-  /** Distributed power iteration over the pinned per-part CSR (round 6).
-    * Same pinned semantics and per-iteration shape as the Dataset loop
-    * (one row-level exchange of contributions per iteration; dangling
-    * mass as (1 − Σcontrib)/n), expressed against LinkGraph.csrZip so
-    * an iteration is ONE two-stage job plus a tiny driver fold —
-    * profiling showed the Dataset form spent about half its wall time
-    * in per-iteration Catalyst/AQE replanning and most of the rest in
-    * Dataset operator overheads (guide §1.2/§7.3).
+  /** Distributed power iteration over the pinned per-part CSR (round 6):
+    * rank blocks aligned to `vidBlocks` (one sorted vertex-id block per
+    * content part, zipped with LinkGraph.csrZip), so an iteration is ONE
+    * two-stage job — contributions routed to their destination part,
+    * merged there — plus a tiny driver fold for the dangling mass
+    * (1 − Σcontrib)/n. Profiling showed the earlier Dataset join+agg
+    * form spent about half its wall time in per-iteration Catalyst/AQE
+    * replanning (guide §1.2/§7.3).
     *
-    * Determinism is STRONGER than the Dataset form: per-destination
-    * contributions accumulate in (ascending src, slab-order dst) order,
-    * messages merge sorted by source part, and the global Σcontrib
-    * folds per-part partials in ascending part order — a pure function
-    * of content at any parallelism. Values agree with the Dataset loop
-    * to float-accumulation noise (~1e-16; both sides round to 6 dp for
-    * the oracle). */
+    * Determinism: per-destination contributions accumulate in
+    * (ascending src, slab-order dst) order, messages merge sorted by
+    * source part, and the global Σcontrib folds per-part partials in
+    * ascending part order — a pure function of content at any
+    * parallelism.
+    *
+    * Durability (N9): with a store attached, every convergence check
+    * commits the (vid, rank) rows and the delta under the number of
+    * completed iterations; `resume` re-aligns the latest commit's rows
+    * to `vidBlocks` and continues from there, bitwise equal to the
+    * uninterrupted run. */
   private def runJoinRdd(graph: LinkGraph, damping: Double, tol: Double,
-                         maxIter: Int, checkEvery: Int): Result = {
+                         maxIter: Int, checkEvery: Int,
+                         ckpt: Option[CheckpointStore],
+                         resume: Boolean): Result = {
     val spark = graph.spark
     import spark.implicits._
     val sc = spark.sparkContext
@@ -152,13 +112,35 @@ object PageRank {
         r
       }
 
-    var ranks: org.apache.spark.rdd.RDD[Array[Double]] =
-      vidBlocks.map(vs => Array.fill(vs.length)(1.0 / n))
+    def rankRows(ranks: org.apache.spark.rdd.RDD[Array[Double]]): DataFrame =
+      spark.createDataset(vidBlocks.zipPartitions(ranks) { (vIt, rIt) =>
+        val vids = vIt.next(); val rks = rIt.next()
+        Iterator.range(0, vids.length).map(i => (vids(i), rks(i)))
+      }).toDF("vid", "rank")
+
+    val resumeStep = if (resume) ckpt.flatMap(_.latestSuperstep()) else None
+    var ranks: org.apache.spark.rdd.RDD[Array[Double]] = resumeStep match {
+      case Some(k) =>
+        val rows = ckpt.get.loadState(k).select($"vid", $"rank")
+          .as[(Long, Double)].rdd
+          .map(t => (graft.util.Hashing.partOf(t._1, p), t))
+          .partitionBy(vpart).values
+        vidBlocks.zipPartitions(rows) { (vIt, rIt) =>
+          val vids = vIt.next()
+          val rks = new Array[Double](vids.length)
+          rIt.foreach { case (v, r) =>
+            rks(java.util.Arrays.binarySearch(vids, v)) = r }
+          Iterator.single(rks)
+        }
+      case None => vidBlocks.map(vs => Array.fill(vs.length)(1.0 / n))
+    }
     var pinnedMerged: Option[org.apache.spark.rdd.RDD[(Array[Double], Double)]] =
       None
     var prevRanks: org.apache.spark.rdd.RDD[Array[Double]] = null
-    var iter = 0
-    var delta = Double.MaxValue
+    // a commit's index is its number of completed iterations
+    var iter = resumeStep.getOrElse(0)
+    var delta = resumeStep.flatMap(ckpt.get.scalar(_, "delta"))
+      .getOrElse(Double.MaxValue)
 
     while (delta > tol && iter < maxIter) {
       // contribution messages: per (source part → destination part),
@@ -283,6 +265,8 @@ object PageRank {
           }
           Iterator.single(mx)
         }.collect().foldLeft(0.0)(math.max)
+        ckpt.foreach(_.commit(iter, rankRows(ranks), Map("delta" -> delta),
+          Nil, Map("damping" -> d.toString, "tol" -> tol.toString)))
       }
       // previous iteration's merged cache is no longer referenced once
       // this one is materialized (the collect above materialized it)
@@ -290,12 +274,7 @@ object PageRank {
       pinnedMerged = Some(merged)
     }
 
-    val rows = vidBlocks.zipPartitions(ranks) { (vIt, rIt) =>
-      val vids = vIt.next(); val rks = rIt.next()
-      Iterator.range(0, vids.length).map(i => (vids(i), rks(i)))
-    }
-    val out = spark.createDataset(rows).toDF("vid", "rank")
-      .localCheckpoint(true)
+    val out = rankRows(ranks).localCheckpoint(true)
     pinnedMerged.foreach(_.unpersist(blocking = false))
     Result(out, iter, delta)
   }

@@ -54,34 +54,45 @@ class CheckpointSpec extends SparkSpec {
         r.state.orderBy("qid", "vid").collect()
           .map(x => (x.getInt(0), x.getLong(1), x.getDouble(2), x.getDouble(3)))
           .toSeq
+      def partitionsListed(store: CheckpointStore, k: Int) =
+        store.manifestText(k).contains(""""partitions":[{""")
 
-      // use the join path for the bitwise reference: the resumed runs are
-      // join-path (ckpt), and the fast path is only rsum-equivalent
+      // with a store, ForwardPush.run takes the pinned-CSR join path with
+      // one committed superstep per epoch; the reference is that same
+      // checkpointed run left uninterrupted
       val rmax = 1e-5 / (g.numEdges + g.numVertices)
-      val full = ForwardPush.runJoin(g, Map(0 -> 0L), 0.2, rmax)
-
-      // interrupted run: stop after 2 supersteps, then resume
       val root = Files.createTempDirectory("ckpt-ppr-").toString
       val store = new CheckpointStore(spark, root, "ppr")
-      val partial = ForwardPush.runJoin(g, Map(0 -> 0L), 0.2, rmax,
+      val full = ForwardPush.run(g, Map(0 -> 0L), 0.2, rmax,
         ckpt = Some(store))
-      // materialize NOW: the resumed run below overwrites the state dirs
-      // this lazy DataFrame points at
-      val partialRows = collectState(partial)
+      val fullRows = collectState(full)
+      assert(store.latestSuperstep().contains(full.supersteps - 1))
+      assert(partitionsListed(store, 2))
+      assert(partitionsListed(store, full.supersteps - 1))
       // simulate a crash at superstep 2 by dropping later manifests
       val mdir = java.nio.file.Paths.get(root, "ppr", "_manifests")
       Files.list(mdir).iterator().forEachRemaining { p =>
         val v = p.getFileName.toString.stripPrefix("v").stripSuffix(".json")
         if (v.toInt > 2) Files.delete(p)
       }
-      assert(new CheckpointStore(spark, root, "ppr").latestSuperstep()
-        .contains(2))
-      val resumed = ForwardPush.runJoin(g, Map(0 -> 0L), 0.2, rmax,
-        ckpt = Some(new CheckpointStore(spark, root, "ppr")), resume = true)
+      val cut = new CheckpointStore(spark, root, "ppr")
+      assert(cut.latestSuperstep().contains(2))
+      val resumed = ForwardPush.run(g, Map(0 -> 0L), 0.2, rmax,
+        ckpt = Some(cut), resume = true)
 
-      val fullRows = collectState(full)
       assert(collectState(resumed) == fullRows)
-      assert(partialRows == fullRows)
+      assert(resumed.supersteps == full.supersteps)
+      assert(resumed.pushes == full.pushes)
+      assert(partitionsListed(cut, full.supersteps - 1))
+      // resuming from the final (fixpoint) commit has nothing left to push
+      val again = ForwardPush.run(g, Map(0 -> 0L), 0.2, rmax,
+        ckpt = Some(cut), resume = true)
+      assert(collectState(again) == fullRows)
+      assert(again.supersteps == full.supersteps)
+      assert(again.pushes == full.pushes)
+      // the chained, uncheckpointed join path reaches the same state
+      assert(collectState(ForwardPush.runJoin(g, Map(0 -> 0L), 0.2, rmax)) ==
+        fullRows)
     } finally g.unpersistAll()
   }
 }

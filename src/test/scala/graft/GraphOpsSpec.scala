@@ -171,6 +171,37 @@ class PageRankSpec extends SparkSpec {
     } finally g.unpersistAll()
   }
 
+  test("checkpointed run resumed from a mid-run commit equals the uninterrupted run") {
+    val g = graph(HandGraphs.complete6 ++ HandGraphs.chain4.map {
+      case (a, b) => (a + 6, b + 6) } ++ Seq((5, 6)))
+    try {
+      def rows(r: PageRank.Result) = r.ranks.orderBy("vid").collect()
+        .map(x => (x.getLong(0), x.getDouble(1))).toSeq
+      val root = java.nio.file.Files.createTempDirectory("ckpt-pr-").toString
+      def run(resume: Boolean) = PageRank.run(g, 0.85, tol = 0.0,
+        maxIter = 10, checkEvery = 2,
+        ckpt = Some(new graft.ckpt.CheckpointStore(spark, root, "pr")),
+        resume = resume)
+      val full = run(resume = false)
+      val fullRows = rows(full)
+      // cut the run back to its commit at iteration 4
+      val mdir = java.nio.file.Paths.get(root, "pr", "_manifests")
+      java.nio.file.Files.list(mdir).iterator().forEachRemaining { p =>
+        val v = p.getFileName.toString.stripPrefix("v").stripSuffix(".json")
+        if (v.toInt > 4) java.nio.file.Files.delete(p)
+      }
+      assert(new graft.ckpt.CheckpointStore(spark, root, "pr")
+        .latestSuperstep().contains(4))
+      assert(full.iterations == 10)
+      // from the cut, then again from the final commit (nothing left to run)
+      Seq(run(resume = true), run(resume = true)).foreach { resumed =>
+        assert(resumed.iterations == full.iterations)
+        assert(resumed.delta == full.delta)
+        assert(rows(resumed) == fullRows)
+      }
+    } finally g.unpersistAll()
+  }
+
   test("personalized power iteration agrees with forward push") {
     val g = graph(HandGraphs.chain4)
     try {
