@@ -1,9 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.LinkGraph
 import graft.ckpt.CheckpointStore
+import graft.util.{Hashing, Prim}
 
 /** FORA: Forward Push + Random Walks with (ε,δ,p_f) error budgeting
   * (SURVEY.md O6/O7/O11/O14; [KDD17 §2].)
@@ -20,6 +23,15 @@ import graft.ckpt.CheckpointStore
   * depositing r(v)/ω_v at its endpoint — unbiased since a walk from v
   * ends at t with probability π(v,t) and the push invariant is
   * π(s,t) = π°(t) + Σ_v r(v)·π(v,t).
+  *
+  * Phase timers (`QueryResult`): `tPushSec` is `ForwardPush.run`.
+  * `tWalkSec` depends on the walk-phase shape `query` picks. On the
+  * broadcast path without a walk index it is the whole walk job: slot
+  * expansion, the walks and the estimate merge, so `scores` is already
+  * materialized. On the column pipeline it is the slot expansion and
+  * the walks (or the index lookup); the salted mass sum and the merge
+  * run lazily when `scores` is consumed, and a checkpoint commit comes
+  * after it.
   */
 object Fora {
 
@@ -34,7 +46,12 @@ object Fora {
                          rsum: Double, rmax: Double, omega: Double,
                          pushes: Long, walks: Long, walkSteps: Long,
                          pushSupersteps: Int = 0,
-                         tPushSec: Double = 0.0, tWalkSec: Double = 0.0,
+                         // push phase (ForwardPush.run)
+                         tPushSec: Double = 0.0,
+                         // walk phase: walk job incl. the merge on the
+                         // broadcast path, expansion + walks (or index
+                         // lookup) on the column pipeline (see above)
+                         tWalkSec: Double = 0.0,
                          // push-phase split: per chained-round epoch +
                          // the kstate/rsum assembly tail (VERDICT r3 #2
                          // — evidence for the hub scaling analysis)
@@ -50,7 +67,8 @@ object Fora {
     rsum * (2.0 * p.eps / 3.0 + 2.0) * math.log(2.0 / pfail) /
       (p.eps * p.eps * delta)
 
-  /** Walk-slot rows per explode chunk (see expandSlots). */
+  /** Walk slots per chunk: the expandSlots explode chunk, and the unit
+    * the broadcast-path walk phase routes to a walk task. */
   private val SlotChunk = 4096L
 
   /** Expand rows carrying an `nwalks` count into one row per slot in
@@ -95,12 +113,19 @@ object Fora {
       .drop("_chunk", "_off")
   }
 
-  /** Whole-graph SSPPR for a batch of sources (EP-A′, SURVEY.md §3.2). */
+  /** Whole-graph SSPPR for a batch of sources (EP-A′, SURVEY.md §3.2).
+    *
+    * The walk phase takes one of two shapes. When the push ran on the
+    * broadcast fast path (it returns its state blocks) and no walk index
+    * is given, `walkBlocks` runs slot expansion, the walks and the
+    * estimate merge as ONE primitive-array job over the state blocks.
+    * Otherwise — a walk index, a checkpoint store, or the join path,
+    * which has no broadcast CSR — the column pipeline runs:
+    * `expandSlots` → `RandomWalks.runCounted` or `WalkIndex.lookup` →
+    * `Salting.saltedSum` → merge. */
   def query(graph: LinkGraph, sources: Map[Int, Long], p: Params = Params(),
             ckpt: Option[CheckpointStore] = None,
             walkIndex: Option[WalkIndex.Index] = None): QueryResult = {
-    val spark = graph.spark
-    import spark.implicits._
     val n = graph.numVertices
     val delta = if (p.delta.isNaN) 1.0 / n else p.delta
     val pfail = if (p.pfail.isNaN) 1.0 / n else p.pfail
@@ -112,6 +137,29 @@ object Fora {
     val tPush = (System.nanoTime() - t0) / 1e9
     val omega = omegaOf(p, push.rsum, delta, pfail)
 
+    push.fastBlocks match {
+      case Some((blocks, bp)) if walkIndex.isEmpty =>
+        val t1 = System.nanoTime()
+        val (scores, walks, steps) =
+          walkBlocks(graph, blocks, bp, omega, push.rsum, p)
+        QueryResult(scores, push.rsum, rmax, omega, push.pushes, walks,
+          steps, push.supersteps, tPush, (System.nanoTime() - t1) / 1e9,
+          push.epochSecs, push.tailSec)
+      case _ =>
+        columnWalks(graph, push, rmax, omega, tPush, p, ckpt, walkIndex)
+    }
+  }
+
+  /** The column-pipeline walk phase of `query`: walk-index lookup,
+    * checkpointed queries and the join path. `tWalkSec` covers the
+    * expansion and the walks (or the index lookup); the estimate merge
+    * stays lazy and runs when `scores` is consumed. */
+  private def columnWalks(graph: LinkGraph, push: ForwardPush.Result,
+                          rmax: Double, omega: Double, tPush: Double,
+                          p: Params, ckpt: Option[CheckpointStore],
+                          walkIndex: Option[WalkIndex.Index]): QueryResult = {
+    val spark = graph.spark
+    import spark.implicits._
     val residuals = push.state.where($"residue" > 0)
       .select($"qid", $"vid", $"residue")
     // ω_v = ceil(r_v·ω/rsum); each walk deposits r_v/ω_v
@@ -150,44 +198,22 @@ object Fora {
       keys = Seq("qid", "vid"), valueCol = "mass",
       saltFrom = $"slot", salts = 64)
     // Estimate assembly (SURVEY.md O11): score = reserve + Σ walk mass.
-    // Fast path: the push state already sits partition-pinned as sorted
-    // primitive blocks — route ONLY the (much smaller, already-unique)
-    // walk mass through the state's own partitioner and merge with a
-    // two-pointer zipPartitions scan. The state never shuffles; each
-    // key's score is reserve + one mass value (a two-term IEEE add —
-    // order-independent), so the result is bitwise equal to the
-    // union+groupBy plan that runs when no block handle exists.
+    // With state blocks (an indexed query on the fast path) the already
+    // unique walk mass goes through the block merge `walkBlocks` uses;
+    // each key's score is then reserve + one mass value (a two-term IEEE
+    // add — order-independent), bitwise equal to the union+groupBy plan
+    // that runs when no block handle exists.
     var scores = push.fastBlocks match {
       case Some((blocks, bp)) if ckpt.isEmpty =>
-        val vp = new ForwardPush.VidPartitioner(bp)
         val massKV = walkMass.select($"qid", $"vid", $"mass")
-          .as[(Long, Long, Double)].rdd
-          .map { case (q, v, mm) => ((q << 40) | v, mm) }
-          .partitionBy(vp)
-        val rows = blocks.zipPartitions(massKV) { (bIt, mIt) =>
-          val blk = if (bIt.hasNext) bIt.next()
-            else ForwardPush.StateBlock(Array.emptyLongArray,
-              Array.emptyDoubleArray, Array.emptyDoubleArray)
-          val mass = new graft.util.Prim.Rows3(64)
-          mIt.foreach { case (k, mm) => mass.append(k, mm, 0.0) }
-          if (mass.n > 1)
-            graft.util.Prim.sort3(mass.keys, mass.a, mass.b, 0, mass.n - 1)
-          new Iterator[ScoreRow] {
-            private var i = 0 // block cursor
-            private var j = 0 // mass cursor
-            def hasNext: Boolean = i < blk.keys.length || j < mass.n
-            def next(): ScoreRow = {
-              val takeBlock = j >= mass.n ||
-                (i < blk.keys.length && blk.keys(i) <= mass.keys(j))
-              val key = if (takeBlock) blk.keys(i) else mass.keys(j)
-              var s = 0.0
-              if (takeBlock) { s += blk.reserve(i); i += 1 }
-              if (j < mass.n && mass.keys(j) == key) { s += mass.a(j); j += 1 }
-              ScoreRow((key >>> 40).toInt, key & ForwardPush.VidMask, s)
-            }
+          .as[(Int, Long, Double)].rdd
+          .mapPartitionsWithIndex { (part, it) =>
+            val rows = new Prim.Rows3(64)
+            it.foreach { case (q, v, mm) =>
+              rows.append((q.toLong << 40) | v, mm, 0.0) }
+            massByDest(part, rows, bp, 0L, 0L)
           }
-        }
-        spark.createDataset(rows).toDF()
+        scoreRows(spark, mergeBlocks(blocks, massKV, bp))
       case _ =>
         push.state.select($"qid", $"vid", $"reserve".as("mass"))
           .unionByName(walkMass.select($"qid", $"vid", $"mass"))
@@ -214,6 +240,217 @@ object Fora {
     }
     QueryResult(scores, push.rsum, rmax, omega, push.pushes, nWalks, steps,
       push.supersteps, tPush, tWalk, push.epochSecs, push.tailSec)
+  }
+
+  /** Walks per task of the block walk phase. */
+  private val WalksPerTask = 32768.0
+
+  /** Walk-task count of the block walk phase, from ω alone — never from
+    * cores: which walks share a task, and so the order in which a key's
+    * endpoint mass is summed, must be a pure function of content. */
+  private[graft] def walkTasks(omega: Double): Int =
+    math.max(1, math.min(64, math.ceil(omega / WalksPerTask).toInt))
+
+  /** Up to SlotChunk consecutive walk slots per residual key, as parallel
+    * arrays: chunk c covers slots [firsts(c), firsts(c) + counts(c)) of
+    * key keys(c), each walk carrying mass(c). `src` is the state block
+    * the chunks came from. */
+  private[ops] final case class SlotChunks(src: Int, keys: Array[Long],
+      firsts: Array[Long], counts: Array[Int], mass: Array[Double])
+
+  /** Endpoint mass pre-summed per packed (qid, vid) key by walk task
+    * `task` (or, for an indexed query, by one partition of the unique
+    * walk mass), with the task's walk and step counts. */
+  private[ops] final case class MassBatch(task: Int, keys: Array[Long],
+      mass: Array[Double], walks: Long, steps: Long)
+
+  /** Merged estimate of one state block: score = reserve + walk mass for
+    * every block key and walk endpoint, key-sorted. */
+  private[ops] final case class ScoreBlock(keys: Array[Long],
+      scores: Array[Double], walks: Long, steps: Long)
+
+  /** The broadcast-path walk phase: slot expansion, walks and the
+    * estimate merge in one job over the push state blocks.
+    *
+    *   1. Each block emits slot chunks for its residual keys: ω_v =
+    *      ceil(r_v·ω/rsum) walks in chunks of ≤ SlotChunk slots (the
+    *      column pipeline's operands in its order, so walk counts and
+    *      masses are bitwise the same), each routed to one of
+    *      `walkTasks(ω)` walk tasks by a hash of (key, first slot).
+    *   2. A walk task takes its chunks in block order — each block's in
+    *      key order — walks every slot on the broadcast CSR with the
+    *      shared `RandomWalks.Walker` kernel, and pre-sums endpoint mass
+    *      per (qid, vid) in walk order.
+    *   3. The partials are routed by the VidPartitioner rule and merged
+    *      into the blocks in walk-task order (`mergeBlock`).
+    *
+    * Every routing key and order is content-derived, so scores are
+    * bitwise repeatable at any parallelism; against the column pipeline
+    * they differ only in the order of each key's mass sum.
+    *
+    * @return (scores, walks, walk steps); the merged blocks are pinned by
+    *         the one job that counts the walks */
+  private def walkBlocks(graph: LinkGraph,
+                         blocks: RDD[ForwardPush.StateBlock], bp: Int,
+                         omega: Double, rsum: Double, p: Params)
+      : (DataFrame, Long, Long) = {
+    val w = walkTasks(omega)
+    val scale = math.max(rsum, 1e-300)
+    val csrB = graph.flatCsr
+    val alpha = p.alpha; val seed = p.seed
+    val chunks = blocks.mapPartitionsWithIndex { (src, it) =>
+      it.flatMap(slotChunks(src, _, omega, scale, w)) }
+    val partials = ForwardPush.routeToParts(chunks, w)
+      .mapPartitionsWithIndex { (task, it) =>
+        val walker = new RandomWalks.Walker(csrB.value, alpha, seed,
+          RandomWalks.MaxSteps)
+        walkChunks(task, it.flatMap(_._2).toArray.sortBy(_.src), walker, bp)
+      }
+    val merged = mergeBlocks(blocks, partials, bp).localCheckpoint()
+    val (walks, steps) = merged.map(b => (b.walks, b.steps))
+      .fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    (scoreRows(graph.spark, merged), walks, steps)
+  }
+
+  /** Slot chunks of one state block, one SlotChunks per walk task. */
+  private def slotChunks(src: Int, blk: ForwardPush.StateBlock,
+                         omega: Double, scale: Double, w: Int)
+      : Iterator[(Int, SlotChunks)] = {
+    val kb = Array.fill(w)(new mutable.ArrayBuilder.ofLong)
+    val fb = Array.fill(w)(new mutable.ArrayBuilder.ofLong)
+    val cb = Array.fill(w)(new mutable.ArrayBuilder.ofInt)
+    val mb = Array.fill(w)(new mutable.ArrayBuilder.ofDouble)
+    var i = 0
+    while (i < blk.keys.length) {
+      val r = blk.residue(i)
+      if (r > 0) {
+        val nw = math.ceil(r * omega / scale).toLong
+        val mass = r / nw
+        var first = 0L
+        while (first < nw) {
+          val d = java.lang.Math.floorMod(
+            Hashing.h64(Hashing.SqlSeed, blk.keys(i), first), w.toLong).toInt
+          kb(d) += blk.keys(i); fb(d) += first
+          cb(d) += math.min(SlotChunk, nw - first).toInt; mb(d) += mass
+          first += SlotChunk
+        }
+      }
+      i += 1
+    }
+    Iterator.range(0, w).filter(kb(_).length > 0).map(d => (d,
+      SlotChunks(src, kb(d).result(), fb(d).result(), cb(d).result(),
+        mb(d).result())))
+  }
+
+  /** Walk every slot of `chunks` (in the given order) and pre-sum the
+    * endpoint mass per packed key, as MassBatches per state block. */
+  private def walkChunks(task: Int, chunks: Array[SlotChunks],
+                         walker: RandomWalks.Walker, bp: Int)
+      : Iterator[(Int, MassBatch)] = {
+    val slots = new Prim.LongSlotMap(1024)
+    val acc = new Prim.Rows3(1024)
+    var walks = 0L
+    var steps = 0L
+    chunks.foreach { b =>
+      var c = 0
+      while (c < b.keys.length) {
+        val vid = b.keys(c) & ForwardPush.VidMask
+        val qbits = b.keys(c) & ~ForwardPush.VidMask
+        var slot = b.firsts(c)
+        val end = slot + b.counts(c)
+        while (slot < end) {
+          val key = qbits | walker.walk(vid, slot, vid)
+          val s = slots.getOrInsert(key, acc.n)
+          if (s == acc.n) acc.append(key, 0.0, 0.0)
+          acc.a(s) += b.mass(c)
+          steps += walker.steps
+          walks += 1
+          slot += 1
+        }
+        c += 1
+      }
+    }
+    massByDest(task, acc, bp, walks, steps)
+  }
+
+  /** Split `rows` (key, mass) into one MassBatch per state block by the
+    * VidPartitioner rule. Block 0 always gets one, carrying the walk and
+    * step counts, so the merge sees every task's counts exactly once. */
+  private def massByDest(task: Int, rows: Prim.Rows3, bp: Int, walks: Long,
+                         steps: Long): Iterator[(Int, MassBatch)] = {
+    val kb = Array.fill(bp)(new mutable.ArrayBuilder.ofLong)
+    val mb = Array.fill(bp)(new mutable.ArrayBuilder.ofDouble)
+    var i = 0
+    while (i < rows.n) {
+      val d = ForwardPush.vidPartOf(rows.keys(i), bp)
+      kb(d) += rows.keys(i); mb(d) += rows.a(i)
+      i += 1
+    }
+    Iterator.range(0, bp).filter(d => d == 0 || kb(d).length > 0).map(d =>
+      (d, MassBatch(task, kb(d).result(), mb(d).result(),
+        if (d == 0) walks else 0L, if (d == 0) steps else 0L)))
+  }
+
+  /** Merge routed walk mass into the state blocks (`mergeBlock` per
+    * block): the one estimate merge of both block-path shapes. */
+  private def mergeBlocks(blocks: RDD[ForwardPush.StateBlock],
+                          mass: RDD[(Int, MassBatch)], bp: Int)
+      : RDD[ScoreBlock] =
+    blocks.zipPartitions(ForwardPush.routeToParts(mass, bp)) { (bIt, mIt) =>
+      val blk = if (bIt.hasNext) bIt.next()
+        else ForwardPush.StateBlock(Array.emptyLongArray,
+          Array.emptyDoubleArray, Array.emptyDoubleArray)
+      Iterator.single(mergeBlock(blk,
+        mIt.flatMap(_._2).toArray.sortBy(_.task)))
+    }
+
+  /** score = reserve + Σ mass for one block, with a two-pointer scan over
+    * the sorted block keys and the key-sorted mass sums. A key's mass is
+    * summed over `batches` in the given order. */
+  private def mergeBlock(blk: ForwardPush.StateBlock,
+                         batches: Array[MassBatch]): ScoreBlock = {
+    val slots = new Prim.LongSlotMap(1024)
+    val mass = new Prim.Rows3(1024)
+    var walks = 0L
+    var steps = 0L
+    batches.foreach { b =>
+      var i = 0
+      while (i < b.keys.length) {
+        val s = slots.getOrInsert(b.keys(i), mass.n)
+        if (s == mass.n) mass.append(b.keys(i), 0.0, 0.0)
+        mass.a(s) += b.mass(i)
+        i += 1
+      }
+      walks += b.walks
+      steps += b.steps
+    }
+    if (mass.n > 1) Prim.sort3(mass.keys, mass.a, mass.b, 0, mass.n - 1)
+    val keys = new Array[Long](blk.keys.length + mass.n)
+    val scores = new Array[Double](keys.length)
+    var i = 0 // block cursor
+    var j = 0 // mass cursor
+    var n = 0
+    while (i < blk.keys.length || j < mass.n) {
+      val takeBlock = j >= mass.n ||
+        (i < blk.keys.length && blk.keys(i) <= mass.keys(j))
+      val key = if (takeBlock) blk.keys(i) else mass.keys(j)
+      var s = 0.0
+      if (takeBlock) { s += blk.reserve(i); i += 1 }
+      if (j < mass.n && mass.keys(j) == key) { s += mass.a(j); j += 1 }
+      keys(n) = key; scores(n) = s; n += 1
+    }
+    ScoreBlock(java.util.Arrays.copyOf(keys, n),
+      java.util.Arrays.copyOf(scores, n), walks, steps)
+  }
+
+  private def scoreRows(spark: SparkSession, merged: RDD[ScoreBlock])
+      : DataFrame = {
+    import spark.implicits._
+    spark.createDataset(merged.flatMap { b =>
+      Iterator.range(0, b.keys.length).map(i => ScoreRow(
+        (b.keys(i) >>> 40).toInt, b.keys(i) & ForwardPush.VidMask,
+        b.scores(i)))
+    }).toDF()
   }
 
   /** Monte-Carlo baseline (SURVEY.md O14; [KDD17 §2.3]): ω pure walks from

@@ -192,10 +192,14 @@ object ForwardPush {
       extends org.apache.spark.Partitioner {
     override def numPartitions: Int = p
     override def getPartition(key: Any): Int =
-      java.lang.Math.floorMod(
-        org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(
-          key.asInstanceOf[Long] & VidMask, 42), p)
+      vidPartOf(key.asInstanceOf[Long], p)
   }
+
+  /** The VidPartitioner rule on an unboxed packed key. */
+  private[ops] def vidPartOf(key: Long, p: Int): Int =
+    java.lang.Math.floorMod(
+      org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(key & VidMask, 42),
+      p)
 
   /** Whole-partition push state as primitive arrays, key-sorted. One
     * StateBlock per partition lives in the RDD cache BY REFERENCE
@@ -261,16 +265,6 @@ object ForwardPush {
       Array.emptyDoubleArray)
     var blocks: org.apache.spark.rdd.RDD[StateBlock] =
       sc.parallelize(0 until p, p).map(_ => empty)
-    val pidPart = new graft.graph.LinkGraph.PartIdPartitioner(p)
-    def routeFrontier(f: org.apache.spark.rdd.RDD[(Int, FBatch)])
-        : org.apache.spark.rdd.RDD[(Int, List[FBatch])] = {
-      import org.apache.spark.rdd.RDD.rddToPairRDDFunctions
-      f.combineByKeyWithClassTag[List[FBatch]](
-        (b: FBatch) => List(b),
-        (l: List[FBatch], b: FBatch) => b :: l,
-        (a: List[FBatch], b: List[FBatch]) => a ::: b,
-        pidPart, mapSideCombine = true)
-    }
     // init enters as frontier: round 1 seeds every init key into the
     // cascade queue, which warm-started ladder runs (finer rmax than the
     // state was converged at) rely on
@@ -312,7 +306,7 @@ object ForwardPush {
       var b = blocks
       var f = frontier
       (0 until rounds).foreach { r =>
-        val fP = routeFrontier(f)
+        val fP = routeToParts(f, p)
         val pushAcc = pushAccs(r)
         val remoteAcc = remoteAccs(r)
         // out: one (newBlock, remoteKeys, remoteResidues) per partition;
@@ -367,6 +361,20 @@ object ForwardPush {
       epochSecs.toSeq, (System.nanoTime() - tTail0) / 1e9)
   }
 
+  /** Route per-destination batches to partition `dest` of p, as one list
+    * per destination. The list-concat combiner forces the single-file
+    * sort-based shuffle writer (a plain partitionBy picks bypass-merge:
+    * p temp files per map task); consumers that depend on batch order
+    * must order the list themselves. */
+  private[ops] def routeToParts[T: ClassTag](f: RDD[(Int, T)], p: Int)
+      : RDD[(Int, List[T])] = {
+    import org.apache.spark.rdd.RDD.rddToPairRDDFunctions
+    f.combineByKeyWithClassTag[List[T]](
+      (b: T) => List(b), (l: List[T], b: T) => b :: l,
+      (a: List[T], b: List[T]) => a ::: b,
+      new graft.graph.LinkGraph.PartIdPartitioner(p), mapSideCombine = true)
+  }
+
   /** Split packed-key frontier rows into one (destPid, (keys, reserves,
     * residues)) batch per destination partition — the same routing as
     * the cascade's local/remote test (murmur3-vid, or qid under
@@ -380,9 +388,7 @@ object ForwardPush {
     while (i < keys.length) {
       val d =
         if (byQid) java.lang.Math.floorMod((keys(i) >>> 40).toInt, p)
-        else java.lang.Math.floorMod(
-          org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(
-            keys(i) & VidMask, 42), p)
+        else vidPartOf(keys(i), p)
       dest(i) = d; counts(d) += 1
       i += 1
     }

@@ -127,9 +127,12 @@ object Dedup {
     * Values are identical: common = |ta ∩ tb| on distinct arrays and
     * the denominator stays sza + szb − common, so the division takes
     * the exact same integer inputs. Docs whose token array is null
-    * (null text) drop out of both forms, and empty-array pairs yield
-    * jaccard 0 (or NaN for empty-empty), filtered by any threshold > 0
-    * — the exploded form simply never emitted them. Both forms are
+    * (null text) or empty (an n-gram array of a text shorter than n) are
+    * dropped before the pair join, as the exploded form never emitted
+    * them. Left in, a null array's `size` is -1 under
+    * `spark.sql.legacy.sizeOfNull` (ANSI off), so two null docs scored
+    * (-1)/(-1-1+1) = jaccard 1.0, and an empty-empty pair divides 0 by 0
+    * (null, or a DIVIDE_BY_ZERO error under ANSI). Both forms are
     * O(pairs) all-pairs by design (this is the exact/oracle primitive;
     * candidate generation at scale is the LSH/banding job). */
   private def jaccardFromTokens(toksIn: DataFrame, threshold: Double)
@@ -142,7 +145,7 @@ object Dedup {
     // bare keyed repartition of a few hundred rows is AQE-coalesced
     // back to one partition, which re-serializes the O(rows²) intersect
     // work onto one task.
-    val t = toksIn.repartition(
+    val t = toksIn.where(size(col("toks")) > 0).repartition(
         toksIn.sparkSession.sessionState.conf.numShufflePartitions,
         col("id"))
       .localCheckpoint(true)

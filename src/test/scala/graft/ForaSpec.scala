@@ -87,6 +87,101 @@ class ForaSpec extends SparkSpec {
     } finally g.unpersistAll()
   }
 
+  /** Pieces of `Fora.query` rebuilt from the public operators: the
+    * push, ω, the column pipeline's walk seeds and their walks. */
+  private case class Column(rsum: Double, omega: Double,
+                            maxWalks: Long, walks: Long, steps: Long,
+                            scores: Map[(Int, Long), Double])
+
+  private def column(g: graft.graph.LinkGraph, sources: Map[Int, Long],
+                     p: Fora.Params): Column = {
+    val sp = spark
+    import sp.implicits._
+    val n = g.numVertices
+    val delta = if (p.delta.isNaN) 1.0 / n else p.delta
+    val pfail = if (p.pfail.isNaN) 1.0 / n else p.pfail
+    val rmax = Fora.rmaxOf(p, g.numEdges, delta, pfail)
+    val push = ForwardPush.run(g, sources, p.alpha, rmax)
+    assert(push.fastBlocks.isDefined, "the spec graph must take the fast path")
+    val omega = Fora.omegaOf(p, push.rsum, delta, pfail)
+    val slots = push.state.where($"residue" > 0)
+      .withColumn("nwalks",
+        ceil($"residue" * lit(omega) / lit(math.max(push.rsum, 1e-300)))
+          .cast("long"))
+    val maxWalks = slots.agg(max($"nwalks")).as[Long].head()
+    val seeds = Fora.expandSlots(slots)
+      .select($"qid", $"vid".as("origin"), $"slot", $"vid".as("cur"),
+        ($"residue" / $"nwalks").as("mass"))
+    val w = RandomWalks.runCounted(g, seeds, p.alpha, p.seed)
+    val scores = push.state.select($"qid", $"vid", $"reserve".as("mass"))
+      .unionByName(w.endpoints.select($"qid", $"vid", $"mass"))
+      .groupBy($"qid", $"vid").agg(sum($"mass"))
+      .as[(Int, Long, Double)].collect()
+      .map { case (q, v, s) => (q, v) -> s }.toMap
+    Column(push.rsum, omega, maxWalks, w.walks, w.steps, scores)
+  }
+
+  private def scoreMap(r: Fora.QueryResult): Map[(Int, Long), Double] =
+    r.scores.collect().map(x => (x.getInt(0), x.getLong(1)) -> x.getDouble(2))
+      .toMap
+
+  /** The broadcast-path walk phase against the column pipeline: same
+    * walks, steps, rsum and ω, the same keys with scores within 1e-12,
+    * unit mass per qid, and bitwise-equal scores on a second call. */
+  private def checkBlockWalks(g: graft.graph.LinkGraph,
+                              sources: Map[Int, Long],
+                              p: Fora.Params): (Fora.QueryResult, Column) = {
+    val res = Fora.query(g, sources, p)
+    val col = column(g, sources, p)
+    assert(res.rsum == col.rsum && res.omega == col.omega)
+    assert(res.walks == col.walks && res.walkSteps == col.steps,
+      s"walks ${res.walks}/${col.walks} steps ${res.walkSteps}/${col.steps}")
+    val got = scoreMap(res)
+    assert(got.keySet == col.scores.keySet)
+    got.foreach { case (k, s) =>
+      assert(math.abs(s - col.scores(k)) < 1e-12, s"$k: $s vs ${col.scores(k)}")
+    }
+    sources.keys.foreach { q =>
+      val tot = got.collect { case ((`q`, _), s) => s }.sum
+      assert(math.abs(tot - 1.0) < 1e-9, s"q=$q tot=$tot")
+    }
+    val again = scoreMap(Fora.query(g, sources, p))
+    assert(again.keySet == got.keySet)
+    got.foreach { case (k, s) =>
+      assert(java.lang.Double.doubleToRawLongBits(s) ==
+        java.lang.Double.doubleToRawLongBits(again(k)), s"$k not bitwise")
+    }
+    (res, col)
+  }
+
+  test("broadcast-path walk phase equals the indexed query and column walks") {
+    val g = graph(edges)
+    try {
+      val p = Fora.Params(eps = 0.5, seed = 7L)
+      val sources = Map(0 -> 0L, 1 -> 7L, 2 -> 13L)
+      val (res, _) = checkBlockWalks(g, sources, p)
+      val idx = WalkIndex.build(g, p)
+      val indexed = scoreMap(Fora.query(g, sources, p, walkIndex = Some(idx)))
+      val got = scoreMap(res)
+      assert(got.keySet == indexed.keySet)
+      got.foreach { case (k, s) =>
+        assert(math.abs(s - indexed(k)) < 1e-12, s"$k: $s vs ${indexed(k)}")
+      }
+      idx.table.unpersist()
+    } finally g.unpersistAll()
+  }
+
+  test("broadcast-path walk phase splits a hot vertex over chunks and tasks") {
+    val g = graph(edges)
+    try {
+      val p = Fora.Params(eps = 0.5, delta = 3e-8, seed = 11L)
+      val (res, col) = checkBlockWalks(g, Map(0 -> 0L, 1 -> 7L, 2 -> 13L), p)
+      assert(col.maxWalks > 4096,
+        s"max walks per vertex ${col.maxWalks}, omega ${res.omega}")
+      assert(Fora.walkTasks(res.omega) > 1, s"omega ${res.omega}")
+    } finally g.unpersistAll()
+  }
+
   test("monte-carlo baseline approximates dense oracle") {
     val g = graph(HandGraphs.star5)
     try {

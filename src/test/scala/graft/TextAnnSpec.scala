@@ -206,6 +206,34 @@ class TextAnnSpec extends SparkSpec {
     want.foreach { case (k, j) => assert(math.abs(got(k) - j) < 1e-9, s"$k") }
   }
 
+  test("jaccard pairs skip null and empty token arrays under any size(null)") {
+    val sp = spark
+    import sp.implicits._
+    // two null-text docs, two texts too short for a 5-gram, one real pair
+    val docs = Seq((1L, null.asInstanceOf[String]),
+      (2L, null.asInstanceOf[String]), (3L, "ab"), (4L, "cd"),
+      (5L, "same words here"), (6L, "same words here")).toDF("doc_id", "text")
+    val conf = sp.conf
+    val keys = Seq("spark.sql.ansi.enabled", "spark.sql.legacy.sizeOfNull")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try {
+      Seq(Seq("true", "false"), Seq("false", "true")).foreach { vals =>
+        keys.zip(vals).foreach { case (k, v) => conf.set(k, v) }
+        def pairs(df: org.apache.spark.sql.DataFrame) =
+          df.select("a", "b").as[(Long, Long)].collect().toSet
+        assert(pairs(Dedup.jaccardPairs(docs.where($"doc_id" <= 2), 0.5))
+          .isEmpty, s"null-text pair under $vals")
+        assert(pairs(Dedup.jaccardPairs(docs, 0.5)) == Set((5L, 6L)),
+          s"word pairs under $vals")
+        assert(pairs(Dedup.ngramJaccardPairs(docs, 5, 0.5)) == Set((5L, 6L)),
+          s"5-gram pairs under $vals")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   test("cosineNearDuplicates recall >= 0.9 vs brute force at 0.95") {
     val sp = spark
     import sp.implicits._

@@ -2,9 +2,12 @@
 """Per-session two-level efficiencies for the r06 sized sessions.
 
 eff = (T_low / T_high) / (P_high / P_low), same-session pairs only.
-Prints one row per (session, workload) plus per-workload medians over
-the sessions that contain both levels.
+Prints one row per workload: its median efficiency over the sessions
+that contain both levels, each session's efficiency and times, and the
+lowest T8 with its session. Without arguments it reads every
+BENCH/scaling_sessions800_r06_s*.jsonl.
 """
+import glob
 import json
 import statistics
 import sys
@@ -39,14 +42,18 @@ def main(files):
     for wl, rows in per_wl.items():
         effs = [e for _, e, _, _ in rows]
         med = statistics.median(effs)
-        best_high = max(rows, key=lambda r: -r[3])  # session w/ best T_8
+        fastest = min(rows, key=lambda r: r[3])  # session with the lowest T8
         print(f"{wl:18s} median={med:.2f}  "
-              + "  ".join(f"{f.split('_')[-1].split('.')[0]}:{e:.2f}"
+              + "  ".join(f"{session(f)}:{e:.2f}"
                           f"(T2={t2:.1f},T8={t8:.1f})"
                           for f, e, t2, t8 in rows)
-              + f"  best-high={best_high[1]:.2f}")
+              + f"  fastest-T8={fastest[3]:.1f}({session(fastest[0])})")
+
+
+def session(path):
+    return path.split("_")[-1].split(".")[0]
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:] or [
-        f"BENCH/scaling_sessions800_r06_s{i}.jsonl" for i in (1, 2, 3, 4)])
+    main(sys.argv[1:] or sorted(
+        glob.glob("BENCH/scaling_sessions800_r06_s*.jsonl")))
