@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.graph.LinkGraph
-import graft.util.Hashing
+import graft.graph.{FlatCsr, LinkGraph}
 
 /** Backward (reverse) push from target vertices (SURVEY.md O15;
   * Andersen et al. 2007; the backward half of BiPPR [KDD17 §2.3]).
@@ -20,16 +19,18 @@ import graft.util.Hashing
   * closed form then converts the whole residual (geometric series), same
   * as forward.
   *
-  * Execution shape mirrors ForwardPush: one row-level exchange per
-  * superstep + a 1:1 per-part join against the persisted weighted in-CSR.
+  * Execution: ForwardPush's engine over the weighted in-CSR — forward
+  * push over transposed edges. The broadcast fast path is
+  * ForwardPush.runFast over [[flatInCsr]]; the join path is
+  * ForwardPush.joinSupersteps over [[inCsr]]'s per-part blocks. The
+  * weights, with the flat threshold and the self-loop absorb that come
+  * with them, travel in the FlatCsr, so each path runs one driver loop
+  * and one cascade for both directions.
   */
 object BackwardPush {
 
   case class BCsr(part: Int, srcIds: Array[Long], offsets: Array[Int],
                   dsts: Array[Long], wts: Array[Double])
-
-  case class Result(state: DataFrame, rsum: Double, supersteps: Int,
-                    pushes: Long)
 
   /** Weighted in-adjacency CSR blocks pinned one-per-content-part: an
     * RDD with exactly `numParts` partitions (partition i = part i's
@@ -148,21 +149,15 @@ object BackwardPush {
     }
   }
 
-  /** Flat weighted in-CSR for the broadcast fast path; dangling vertices
-    * carry their explicit (v ← v, w=1) self-loop entry. */
-  case class FlatBCsr(srcIds: Array[Long], offsets: Array[Int],
-                      dsts: Array[Long], wts: Array[Double]) {
-    def indexOf(vid: Long): Int = java.util.Arrays.binarySearch(srcIds, vid)
-    def degOf(idx: Int): Int = offsets(idx + 1) - offsets(idx)
-  }
-
   /** Build (once per graph INSTANCE — lifetime tracked by the LinkGraph,
     * destroyed in unpersistAll; a storageDir-keyed global cache served
-    * stale CSRs after same-dir rebuilds) the broadcast reverse CSR.
+    * stale CSRs after same-dir rebuilds) the broadcast weighted in-CSR:
+    * a FlatCsr with entry weights, dangling vertices carrying their
+    * explicit (v ← v, w = 1) self-loop entry.
     * Collects the adjacency to the driver — legitimate under the same
     * memory budget as LinkGraph.flatCsr (~24 B/edge), gated by
     * fastPathMaxEdges. */
-  def flatInCsr(graph: LinkGraph): org.apache.spark.broadcast.Broadcast[FlatBCsr] =
+  def flatInCsr(graph: LinkGraph): Broadcast[FlatCsr] =
     graph.registerBroadcast("flatInCsr") {
       val slabs = graph.adj.collect()
       val verts = graph.vertices.collect()
@@ -201,7 +196,7 @@ object BackwardPush {
       // every vertex has >= 1 in-entry OR is a pure source with none;
       // compact to the actually-present targets. After the in-place sort
       // `us`/`ws` ARE the entry arrays (trim to the filled prefix).
-      val b = FlatBCsr(srcIds.take(nSrc), offsets.take(nSrc + 1),
+      val b = FlatCsr(srcIds.take(nSrc), offsets.take(nSrc + 1),
         java.util.Arrays.copyOf(us, i), java.util.Arrays.copyOf(ws, i))
       graph.spark.sparkContext.broadcast(b)
     }
@@ -210,313 +205,33 @@ object BackwardPush {
     * Dispatches to the packed-key broadcast fast path when the graph fits
     * the broadcast budget, else the per-partition pinned-CSR join path. */
   def run(graph: LinkGraph, targets: Map[Int, Long], alpha: Double,
-          rmax: Double, maxSupersteps: Int = 10000): Result = {
+          rmax: Double, maxSupersteps: Int = 10000): ForwardPush.Result = {
     if (graph.numEdges <= ForwardPush.fastPathMaxEdges &&
         ForwardPush.packableKeys(graph, targets))
       runFast(graph, targets, alpha, rmax, maxSupersteps)
     else runJoin(graph, targets, alpha, rmax, maxSupersteps)
   }
 
-  /** Broadcast fast path: packed keys qid<<40|vid, primitive cascade
-    * against the flat in-CSR, chained rounds per job — the backward
-    * mirror of ForwardPush.runFast. */
+  /** Broadcast fast path: ForwardPush.runFast's StateBlock loop and
+    * block cascade over the flat weighted in-CSR. */
   def runFast(graph: LinkGraph, targets: Map[Int, Long], alpha: Double,
               rmax: Double, maxSupersteps: Int = 10000,
-              chainLen: Int = 8): Result = {
-    val spark = graph.spark
-    import spark.implicits._
-    // same two-regime content-derived rule as the forward fast path:
-    // a small graph's cascade drains locally in one chained job (p=1)
-    // instead of paying ~supersteps × p near-empty shuffle tasks
-    val p = ForwardPush.fastStateParts(graph.numEdges)
-    val sc = spark.sparkContext
-    val csrB = flatInCsr(graph)
-    // round 6: plain RDD rounds with the VidPartitioner — placement is
-    // the SAME pmod(murmur3(key & VidMask), p) the old Dataset
-    // repartition computed, and cascadeFastB sorts its input, so
-    // results are bitwise unchanged while the per-epoch Catalyst
-    // planning/encoding of an 8-deep repartition chain is gone (the
-    // runJoin treatment applied to the packed fast path).
-    val vp = new ForwardPush.VidPartitioner(p)
+              chainLen: Int = 8): ForwardPush.Result =
+    ForwardPush.runFast(graph, targets, alpha, rmax, maxSupersteps,
+      chainLen, csr = Some(flatInCsr(graph)))
 
-    var state: org.apache.spark.rdd.RDD[ForwardPush.KRow] = sc.parallelize(
-      targets.toSeq.sortBy(_._1)
-        .map { case (q, v) =>
-          ForwardPush.KRow((q.toLong << 40) | v, 0.0, 1.0) }, 1)
-    var pinned: Option[org.apache.spark.rdd.RDD[ForwardPush.KRow]] = None
-    var step = 0
-    var converged = false
-    var totalPushes = 0L
-    // p == 1 makes remote deltas structurally impossible — chain 1
-    // (see ForwardPush.runFastK: later chained rounds are identity
-    // re-shuffles of the full state)
-    val effChain = if (p == 1) 1 else chainLen
-    while (!converged && step < maxSupersteps) {
-      val rounds = math.min(effChain, maxSupersteps - step)
-      // per-round accumulators + last-round-quiet convergence (see
-      // ForwardPush.runFastK): skips the all-no-op trailing epoch
-      val pushAccs = Array.tabulate(rounds)(r =>
-        sc.longAccumulator(s"bfpushes_${step}_$r"))
-      val remoteAccs = Array.tabulate(rounds)(r =>
-        sc.longAccumulator(s"bfremote_${step}_$r"))
-      var out = state
-      (0 until rounds).foreach { r =>
-        val pushAcc = pushAccs(r)
-        val remoteAcc = remoteAccs(r)
-        out = out.map(kr => (kr.key, kr)).partitionBy(vp)
-          .mapPartitions({ it =>
-            cascadeFastB(it.map(_._2), csrB.value, alpha, rmax, p,
-              pushAcc.add(_), remoteAcc.add(_))
-          }, preservesPartitioning = true)
-      }
-      val ck = out.localCheckpoint()
-      ck.count()
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(ck)
-      state = ck
-      totalPushes += pushAccs.map(_.value.toLong).sum
-      converged = remoteAccs(rounds - 1).value == 0
-      step += rounds
-    }
-    val finalState = ForwardPush.unpackK(spark,
-      spark.createDataset(state).toDF())
-    val rsum = finalState.agg(coalesce(sum($"residue"), lit(0.0)))
-      .as[Double].head()
-    Result(finalState, rsum, step, totalPushes)
-  }
-
-  /** Primitive-array backward cascade for one hash partition. */
-  private def cascadeFastB(it: Iterator[ForwardPush.KRow], csr: FlatBCsr,
-                           alpha: Double, rmax: Double, p: Int,
-                           onPush: Long => Unit, onRemote: Long => Unit)
-      : Iterator[ForwardPush.KRow] = {
-    import graft.util.Prim
-    val VidMask = ForwardPush.VidMask
-    val pid = org.apache.spark.TaskContext.getPartitionId()
-    val in = new Prim.Rows3(1024)
-    it.foreach(r => in.append(r.key, r.reserve, r.residue))
-    if (in.n == 0) { onPush(0L); onRemote(0L); return Iterator.empty }
-    Prim.sort3(in.keys, in.a, in.b, 0, in.n - 1)
-
-    val map = new Prim.LongSlotMap(in.n)
-    val store = new Prim.Rows3(in.n)
-    var idxs = new Array[Int](store.keys.length)
-    def slotOf(key: Long): Int = {
-      val s = map.getOrInsert(key, store.n)
-      if (s == store.n) {
-        store.append(key, 0.0, 0.0)
-        if (idxs.length < store.keys.length)
-          idxs = java.util.Arrays.copyOf(idxs, store.keys.length)
-        idxs(s) = csr.indexOf(key & VidMask)
-      }
-      s
-    }
-    var i = 0
-    while (i < in.n) {
-      val s = slotOf(in.keys(i))
-      store.a(s) += in.a(i); store.b(s) += in.b(i)
-      i += 1
-    }
-    val queue = new Prim.IntQueue(store.n)
-    val inQ = new java.util.BitSet(store.n)
-    i = 0
-    while (i < store.n) {
-      if (store.b(i) > rmax) { queue.add(i); inQ.set(i) }
-      i += 1
-    }
-    val remoteMap = new Prim.LongSlotMap(64)
-    val remote = new Prim.Rows3(64)
-    var pushes = 0L
-    while (queue.nonEmpty) {
-      val s = queue.poll()
-      inQ.clear(s)
-      val r = store.b(s)
-      if (r > rmax) {
-        pushes += 1
-        val idx = idxs(s)
-        val vid = store.keys(s) & VidMask
-        // pure self-loop row (dangling absorb): closed-form conversion
-        if (idx >= 0 && csr.degOf(idx) == 1 &&
-            csr.dsts(csr.offsets(idx)) == vid &&
-            csr.wts(csr.offsets(idx)) == 1.0) {
-          store.a(s) += r
-          store.b(s) = 0.0
-        } else {
-          store.a(s) += alpha * r
-          store.b(s) = 0.0
-          if (idx >= 0) {
-            val qbits = store.keys(s) & ~VidMask
-            var e = csr.offsets(idx)
-            val end = csr.offsets(idx + 1)
-            while (e < end) {
-              val u = csr.dsts(e)
-              val m = (1.0 - alpha) * r * csr.wts(e)
-              if (java.lang.Math.floorMod(
-                  org.apache.spark.unsafe.hash.Murmur3_x86_32
-                    .hashLong(u, 42), p) == pid) {
-                val s2 = slotOf(qbits | u)
-                store.b(s2) += m
-                if (store.b(s2) > rmax && !inQ.get(s2)) {
-                  queue.add(s2); inQ.set(s2)
-                }
-              } else {
-                val rs = remoteMap.getOrInsert(qbits | u, remote.n)
-                if (rs == remote.n) remote.append(qbits | u, 0.0, 0.0)
-                remote.b(rs) += m
-              }
-              e += 1
-            }
-          }
-        }
-      }
-    }
-    onPush(pushes)
-    onRemote(remote.n.toLong)
-    val localIt = (0 until store.n).iterator
-      .filter(s => store.a(s) != 0.0 || store.b(s) != 0.0)
-      .map(s => ForwardPush.KRow(store.keys(s), store.a(s), store.b(s)))
-    val remoteIt = (0 until remote.n).iterator
-      .map(s => ForwardPush.KRow(remote.keys(s), 0.0, remote.b(s)))
-    localIt ++ remoteIt
-  }
-
-  /** Per-partition pinned-CSR path (beyond broadcast memory): the
-    * backward cascade over the weighted in-CSR (inCsr, partition i =
-    * part i), driven by the forward join path's superstep loop
-    * (ForwardPush.joinSupersteps) — same batched exchange, same
-    * `chainLen` rounds per job between localCheckpoint truncations. */
+  /** Per-partition pinned-CSR path (beyond broadcast memory): the forward
+    * join path's superstep loop and cascade over the weighted in-CSR
+    * blocks (inCsr, partition i = part i). */
   def runJoin(graph: LinkGraph, targets: Map[Int, Long], alpha: Double,
               rmax: Double, maxSupersteps: Int = 10000,
-              chainLen: Int = 16): Result = {
-    val p = graph.numParts
-    val r = ForwardPush.joinSupersteps(graph.spark, p, inCsr(graph), targets,
-      maxSupersteps, chainLen, ckpt = None, resume = false, Map.empty) {
-      (part, rows, block, onPush, onRemote, _) =>
-        cascade(part, rows, block, alpha, rmax, p, onPush, onRemote)
-    }
-    Result(r.state, r.rsum, r.supersteps, r.pushes)
-  }
-
-  /** Primitive-array rewrite of the boxed cascade (round 6 — see
-    * ForwardPush.cascade's equivalence notes; the backward thresholds are
-    * flat rmax and entries carry weights, otherwise the operation order
-    * is reproduced identically, so results are bitwise unchanged). */
-  private def cascade(part: Int,
-                      states: Iterator[(Int, Long, Double, Double)],
-                      block: Option[BCsr], alpha: Double, rmax: Double,
-                      p: Int, onPush: Long => Unit, onRemote: Long => Unit)
-      : Iterator[(Int, Long, Double, Double)] = {
-    import graft.util.Prim
-    val srcIds = block.map(_.srcIds).getOrElse(Array.empty[Long])
-    val offsets = block.map(_.offsets).getOrElse(Array.empty[Int])
-    val dsts = block.map(_.dsts).getOrElse(Array.empty[Long])
-    val wts = block.map(_.wts).getOrElse(Array.empty[Double])
-
-    val in = new Prim.PairRows(256)
-    states.foreach { case (q, v, re, rs) => in.append(q, v, re, rs) }
-    if (in.n == 0) { onPush(0L); onRemote(0L); return Iterator.empty }
-    if (in.n > 1) Prim.sort4p(in.qids, in.vids, in.a, in.b, 0, in.n - 1)
-
-    val map = new Prim.PairSlotMap(in.n)
-    val store = new Prim.PairRows(in.n)
-    var degIdx = new Array[Int](store.qids.length)
-    java.util.Arrays.fill(degIdx, -2)
-    def slotOf(q: Int, v: Long): Int = {
-      val s = map.getOrInsert(q, v, store.n)
-      if (s == store.n) {
-        store.append(q, v, 0.0, 0.0)
-        if (degIdx.length < store.qids.length) {
-          val old = degIdx.length
-          degIdx = java.util.Arrays.copyOf(degIdx, store.qids.length)
-          java.util.Arrays.fill(degIdx, old, degIdx.length, -2)
-        }
-      }
-      s
-    }
-    def idxOf(s: Int): Int = {
-      if (degIdx(s) == -2) {
-        val r = java.util.Arrays.binarySearch(srcIds, store.vids(s))
-        degIdx(s) = if (r >= 0) r else -1
-      }
-      degIdx(s)
-    }
-
-    var i = 0
-    while (i < in.n) {
-      val s = slotOf(in.qids(i), in.vids(i))
-      store.a(s) += in.a(i); store.b(s) += in.b(i)
-      i += 1
-    }
-
-    val queue = new Prim.IntQueue(64)
-    val inQ = new java.util.BitSet(store.n + 64)
-    var s0 = 0
-    while (s0 < store.n) {
-      if (store.b(s0) > rmax) { queue.add(s0); inQ.set(s0) }
-      s0 += 1
-    }
-
-    val remoteMap = new Prim.PairSlotMap(64)
-    val remote = new Prim.PairRows(64)
-    var pushes = 0L
-    while (queue.nonEmpty) {
-      val s = queue.poll()
-      inQ.clear(s)
-      val r = store.b(s)
-      if (r > rmax) {
-        pushes += 1
-        val idx = idxOf(s)
-        val vid = store.vids(s)
-        // self-loop entries make the dangling geometric series explicit;
-        // detect pure self-loop rows for the closed form
-        if (idx >= 0 && offsets(idx + 1) - offsets(idx) == 1 &&
-            dsts(offsets(idx)) == vid && wts(offsets(idx)) == 1.0) {
-          store.a(s) += r; store.b(s) = 0.0 // absorb closed form
-        } else {
-          store.a(s) += alpha * r
-          store.b(s) = 0.0
-          if (idx >= 0) {
-            val qid = store.qids(s)
-            var e = offsets(idx)
-            val end = offsets(idx + 1)
-            while (e < end) {
-              val u = dsts(e); val m = (1.0 - alpha) * r * wts(e)
-              if (Hashing.partOf(u, p) == part) {
-                val s2 = slotOf(qid, u)
-                store.b(s2) += m
-                if (store.b(s2) > rmax && !inQ.get(s2)) {
-                  queue.add(s2); inQ.set(s2)
-                }
-              } else {
-                val rs = remoteMap.getOrInsert(qid, u, remote.n)
-                if (rs == remote.n) remote.append(qid, u, 0.0, 0.0)
-                remote.b(rs) += m
-              }
-              e += 1
-            }
-          }
-        }
-      }
-    }
-    onPush(pushes)
-    onRemote(remote.n.toLong)
-    val local = new Prim.PairRows(store.n)
-    i = 0
-    while (i < store.n) {
-      if (store.a(i) != 0.0 || store.b(i) != 0.0)
-        local.append(store.qids(i), store.vids(i), store.a(i), store.b(i))
-      i += 1
-    }
-    if (local.n > 1)
-      Prim.sort4p(local.qids, local.vids, local.a, local.b, 0, local.n - 1)
-    if (remote.n > 1)
-      Prim.sort4p(remote.qids, remote.vids, remote.a, remote.b, 0,
-        remote.n - 1)
-    Iterator.range(0, local.n).map(j =>
-      (local.qids(j), local.vids(j), local.a(j), local.b(j))) ++
-      Iterator.range(0, remote.n).map(j =>
-        (remote.qids(j), remote.vids(j), 0.0, remote.b(j)))
-  }
+              chainLen: Int = 16): ForwardPush.Result =
+    ForwardPush.joinSupersteps(graph.spark, graph.numParts,
+      ForwardPush.partCsrs(inCsr(graph), FlatCsr(Array.emptyLongArray,
+        Array(0), Array.emptyLongArray, Array.emptyDoubleArray))(
+        b => FlatCsr(b.srcIds, b.offsets, b.dsts, b.wts)),
+      targets, alpha, rmax, maxSupersteps, chainLen, ckpt = None,
+      resume = false)
 
   /** BiPPR pair query (SURVEY.md O16): π̂(s,t) = π°_t(s) +
     * (1/ω)·Σ_w r_t(endpoint of forward walk w from s). */

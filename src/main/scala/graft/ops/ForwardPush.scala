@@ -1,17 +1,21 @@
 package graft.ops
 
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
-import graft.graph.{CsrBlock, LinkGraph, PartMetrics}
+import graft.graph.{FlatCsr, LinkGraph, PartMetrics}
 import graft.ckpt.CheckpointStore
 import graft.util.Hashing
 
-/** FORA Forward Push (SURVEY.md O4/O5/O7/O17; [FOCS06] Alg., [KDD17 §2.2]).
+/** FORA Forward Push (SURVEY.md O4/O5/O7/O17; [FOCS06] Alg., [KDD17 §2.2])
+  * — and, over the transposed weighted in-CSR, backward push
+  * ([[BackwardPush]]): one engine, two paths, both directions. The
+  * direction lives only in the [[FlatCsr]] a cascade is handed.
   *
   * Local-push invariant: for every target t,
   *   π(s,t) = π°(t) + Σ_v r(v)·π(v,t)
@@ -19,19 +23,26 @@ import graft.util.Hashing
   * PPR with per-vertex additive error ≤ rsum; the deterministic 1e-6 mode
   * sets rmax = tol/(m+n) so rsum ≤ tol at convergence.
   *
-  * Execution model (SURVEY.md §3.2): state rows (qid, vid, reserve,
-  * residue) are grouped by content-derived partition `part =
-  * pmod(xxhash64(vid), P)` — ONE row-level Exchange per superstep — then
-  * joined 1:1 per part with the persisted CSR blocks (exchange-free: the
-  * block table is cached hash-partitioned on `part`). Inside each part a
-  * sequential cascade pushes to *local* quiescence, so residual mass only
-  * crosses the shuffle boundary when it leaves the partition — this is the
-  * "residual-push frontier exchange" of the north rule, with far fewer
-  * supersteps than one-push-per-superstep designs.
+  * Execution model (SURVEY.md §3.2), one driver loop and one cascade per
+  * path:
+  *   - Broadcast fast path ([[runFastK]] / [[cascadeBlock]]): the whole
+  *     adjacency is a broadcast FlatCsr; each partition holds its state
+  *     as one key-sorted primitive [[StateBlock]] pinned in the RDD cache,
+  *     and only frontier deltas cross the shuffle, routed by
+  *     murmur3(vid) mod p ([[VidPartitioner]]), p = [[fastStateParts]].
+  *   - Join path ([[joinSupersteps]] / [[cascade]]): the persisted CSR
+  *     blocks stay pinned one per content part (Hashing.partOf(vid, p),
+  *     xxhash64) and each round ships only state rows, as primitive
+  *     batches; with a [[CheckpointStore]] every superstep commits.
+  * Inside each partition a sequential cascade pushes to *local*
+  * quiescence, so residual mass only crosses the shuffle boundary when it
+  * leaves the partition — the "residual-push frontier exchange" of the
+  * north rule, with far fewer supersteps than one push per superstep.
+  * Rounds chain inside one job per epoch between lineage truncations.
   *
   * Determinism: cascade processing order is sorted and content-keyed, all
-  * float accumulation happens in that order, and `part` depends only on
-  * vid and P (never on physical parallelism) ⇒ identical results at
+  * float accumulation happens in that order, and the routing depends only
+  * on vid and p (never on physical parallelism) ⇒ identical results at
   * local[8] vs local[32].
   *
   * Dangling convention (pinned; SURVEY.md §2.4 item 1): a vertex with no
@@ -149,17 +160,20 @@ object ForwardPush {
     * truncation, amortizing job/driver latency (the scaling-efficiency
     * killer measured on the join path). Bitwise deterministic: partition
     * ownership is pmod(murmur3(vid), P) — fixed by P, not by parallelism
-    * — and every merge happens in sorted key order. */
+    * — and every merge happens in sorted key order.
+    *
+    * @param csr the adjacency pushed over (see runFastK) */
   def runFast(graph: LinkGraph, sources: Map[Int, Long], alpha: Double,
               rmax: Double, maxSupersteps: Int = 10000,
-              chainLen: Int = 8, qidShard: Int = 1): Result = {
+              chainLen: Int = 8, qidShard: Int = 1,
+              csr: Option[Broadcast[FlatCsr]] = None): Result = {
     val spark = graph.spark
     import spark.implicits._
     val init: DataFrame = sources.toSeq.sortBy(_._1)
       .map { case (q, v) => KRow((q.toLong << 40) | v, 0.0, 1.0) }
       .toDF()
     val fr = runFastK(graph, init, alpha, rmax, maxSupersteps, chainLen,
-      qidShard)
+      qidShard, csr)
     Result(unpackK(spark, fr.kstate), fr.rsum, fr.supersteps, fr.pushes,
       fr.blocks, fr.epochSecs, fr.tailSec)
   }
@@ -236,17 +250,22 @@ object ForwardPush {
     * (which the batched==solo spec already pins against the unsharded
     * batch). ONLY the cross-qid rsum fold can differ in the last ulp —
     * callers that consume rsum (Fora.query's ω) must not opt in; the
-    * exact-oracle and hub-build call sites ignore rsum. */
+    * exact-oracle and hub-build call sites ignore rsum.
+    *
+    * @param csr the adjacency pushed over: the graph's out-CSR
+    * (graph.flatCsr, forward push) when None; BackwardPush passes the
+    * weighted in-CSR, which makes this loop backward push. */
   def runFastK(graph: LinkGraph, init: DataFrame, alpha: Double,
                rmax: Double, maxSupersteps: Int = 10000,
-               chainLen: Int = 8, qidShard: Int = 1): FastResult = {
+               chainLen: Int = 8, qidShard: Int = 1,
+               csr: Option[Broadcast[FlatCsr]] = None): FastResult = {
     val spark = graph.spark
     import spark.implicits._
     val pv = fastStateParts(graph.numEdges)
     val byQid = qidShard > 1 && pv == 1
     val p = if (byQid) math.min(qidShard, 64) else pv
     val sc = spark.sparkContext
-    val csrB = graph.flatCsr
+    val csrB = csr.getOrElse(graph.flatCsr)
 
     // frontier rows travel as per-DESTINATION-partition batches of
     // primitive arrays (round 6): row-at-a-time partitionBy picked the
@@ -407,7 +426,8 @@ object ForwardPush {
       .map(d => (d, (outK(d), outA(d), outB(d))))
   }
 
-  /** Primitive-array cascade for one hash partition (fast path). The
+  /** Primitive-array cascade for one hash partition (fast path), either
+    * direction (the FlatCsr carries it). The
     * block's keys are SORTED, so settled-state lookups are binary
     * searches and only keys first seen this round go through a hash map
     * (the appended tail). Only dIt-touched keys can exceed threshold
@@ -419,7 +439,7 @@ object ForwardPush {
     * @return (new sorted block, remote delta keys, remote residues) */
   private def cascadeBlock(block: StateBlock,
                            dIt: Iterator[(Long, (Double, Double))],
-                           csr: graft.graph.FlatCsr,
+                           csr: FlatCsr,
                            alpha: Double, rmax: Double, p: Int,
                            onPush: Long => Unit, onRemote: Long => Unit,
                            byQid: Boolean = false)
@@ -472,11 +492,7 @@ object ForwardPush {
         s
       }
     }
-    def thresholdOf(s: Int): Double = {
-      val idx = idxOf(s)
-      val d = if (idx >= 0) csr.degOf(idx) else 0
-      rmax * math.max(d, 1)
-    }
+    def thresholdOf(s: Int): Double = rmax * csr.thresholdDeg(idxOf(s))
 
     val queue = new Prim.IntQueue(64)
     val inQ = new java.util.BitSet(store.n + 64)
@@ -500,14 +516,13 @@ object ForwardPush {
       if (r > thresholdOf(s)) {
         pushes += 1
         val idx = idxOf(s)
-        if (idx < 0) { // dangling absorbs (closed-form self-loop series)
-          store.a(s) += r
-          store.b(s) = 0.0
-        } else {
-          store.a(s) += alpha * r
-          store.b(s) = 0.0
-          val deg = csr.degOf(idx)
-          val share = (1.0 - alpha) * r / deg
+        // a dangling self-loop series converts all of r in closed form;
+        // a vertex without a slab (backward: no in-entries) spreads nothing
+        val absorb = csr.absorbs(idx, store.keys(s) & VidMask)
+        store.a(s) += (if (absorb) r else alpha * r)
+        store.b(s) = 0.0
+        if (!absorb && idx >= 0) {
+          val share = (1.0 - alpha) * r / csr.divisor(idx)
           val qbits = store.keys(s) & ~VidMask
           // qid routing: deposits share the pusher's qid, so locality is
           // constant per push (always local — remote stays empty)
@@ -518,19 +533,20 @@ object ForwardPush {
           while (e < end) {
             val dv = csr.dsts(e)
             val dkey = qbits | dv
+            val m = share * csr.weight(e)
             if (if (byQid) qidLocal
                 else java.lang.Math.floorMod(
                   org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(dv, 42),
                   p) == pid) {
               val s2 = slotOf(dkey)
-              store.b(s2) += share
+              store.b(s2) += m
               if (store.b(s2) > thresholdOf(s2) && !inQ.get(s2)) {
                 queue.add(s2); inQ.set(s2)
               }
             } else {
               val rs = remoteMap.getOrInsert(dkey, remote.n)
               if (rs == remote.n) remote.append(dkey, 0.0, 0.0)
-              remote.b(rs) += share
+              remote.b(rs) += m
             }
             e += 1
           }
@@ -580,8 +596,8 @@ object ForwardPush {
   }
 
   /** Per-partition CSR-join path (scales beyond broadcast memory;
-    * supports durable per-superstep checkpoint + resume): the forward
-    * cascade over LinkGraph.csrZip, driven by [[joinSupersteps]].
+    * supports durable per-superstep checkpoint + resume): the cascade
+    * over LinkGraph.csrZip's out-CSR blocks, driven by [[joinSupersteps]].
     *
     * @param chainLen rounds chained lazily inside ONE job between
     *   lineage truncations when no checkpoint store is attached — the
@@ -593,35 +609,31 @@ object ForwardPush {
   def runJoin(graph: LinkGraph, sources: Map[Int, Long], alpha: Double,
               rmax: Double, ckpt: Option[CheckpointStore] = None,
               resume: Boolean = false, maxSupersteps: Int = 10000,
-              chainLen: Int = 16): Result = {
-    val p = graph.numParts
-    joinSupersteps(graph.spark, p, graph.csrZip, sources, maxSupersteps,
-      chainLen, ckpt, resume, Map("alpha" -> alpha.toString,
-        "rmax" -> rmax.toString, "numParts" -> p.toString)) {
-      (part, rows, block, onPush, onRemote, onMetrics) =>
-        cascade(part, rows, block, alpha, rmax, p, onPush, onRemote,
-          onMetrics)
-    }
-  }
+              chainLen: Int = 16): Result =
+    joinSupersteps(graph.spark, graph.numParts,
+      partCsrs(graph.csrZip, FlatCsr(Array.emptyLongArray, Array(0),
+        Array.emptyLongArray))(b => FlatCsr(b.srcIds, b.offsets, b.dsts)),
+      sources, alpha, rmax, maxSupersteps, chainLen, ckpt, resume)
 
-  /** One part's cascade on the join path: (part, that part's unmerged
-    * (qid, vid, reserve, residue) rows, its pinned CSR block, push /
-    * remote-delta / per-part metrics sinks) → output rows, local ones
-    * and remote deltas alike. */
-  private[ops] type JoinCascade[B] = (Int, Iterator[(Int, Long, Double, Double)],
-    Option[B], Long => Unit, Long => Unit, PartMetrics => Unit) =>
-    Iterator[(Int, Long, Double, Double)]
+  /** One adjacency per content part for the join cascade: part i's
+    * pinned block viewed as a FlatCsr (no copy), or `none` — an empty
+    * adjacency of the same direction — where the part has no block. */
+  private[ops] def partCsrs[B](blocks: RDD[B], none: FlatCsr)(
+      view: B => FlatCsr): RDD[FlatCsr] =
+    blocks.mapPartitions(it =>
+      Iterator.single(if (it.hasNext) view(it.next()) else none))
 
-  /** The superstep driver loop of the join path, shared by forward push
-    * (over csrZip) and backward push (over the weighted in-CSR).
+  /** The superstep driver loop of the join path, for both directions:
+    * forward push over csrZip, backward push over the weighted in-CSR
+    * (`csrs` holds exactly one adjacency per part, see partCsrs).
     *
     * Pinned-CSR formulation (round 6, guide §2.4 / §1.2): the CSR blocks
-    * sit ONCE in `csrZip`'s cache, partition i = content part i; each
-    * round routes ONLY the state rows with a PartIdPartitioner on
-    * Hashing.partOf(vid, p) and zipPartitions feeds each part's row
-    * multiset into its cascade (which sorts its input), so a round costs
-    * ONE shuffle of frontier+state rows and the static CSR is never
-    * re-exchanged. Rounds chain lazily in RDD lineage inside one job per
+    * sit ONCE in a cached RDD (csrZip, BackwardPush.inCsr), partition
+    * i = content part i; each round routes ONLY the state rows with a
+    * PartIdPartitioner on Hashing.partOf(vid, p) and zipPartitions
+    * feeds each part's row multiset into its cascade (which sorts its
+    * input), so a round costs ONE shuffle of frontier+state rows and the
+    * static CSR is never re-exchanged. Rounds chain lazily in RDD lineage inside one job per
     * epoch, then a localCheckpoint truncates.
     *
     * Durability (N9): with a store attached the chain is 1 and every
@@ -633,10 +645,10 @@ object ForwardPush {
     * exchange through packByDest, and since the cascade sorts its input
     * the next superstep sees the identical row multiset — a resumed run
     * is bitwise equal to the uninterrupted one. */
-  private[ops] def joinSupersteps[B: ClassTag](spark: SparkSession, p: Int,
-      csrZip: RDD[B], seeds: Map[Int, Long], maxSupersteps: Int,
-      chainLen: Int, ckpt: Option[CheckpointStore], resume: Boolean,
-      params: Map[String, String])(cascade: JoinCascade[B]): Result = {
+  private[ops] def joinSupersteps(spark: SparkSession, p: Int,
+      csrs: RDD[FlatCsr], seeds: Map[Int, Long], alpha: Double,
+      rmax: Double, maxSupersteps: Int, chainLen: Int,
+      ckpt: Option[CheckpointStore], resume: Boolean): Result = {
     import spark.implicits._
     val sc = spark.sparkContext
     val vpart = new LinkGraph.PartIdPartitioner(p)
@@ -681,10 +693,10 @@ object ForwardPush {
         // keys are DESTINATION parts (remote deltas included), so it
         // does not satisfy vpart's contract — claiming it would make
         // the next partitionBy(vpart) short-circuit the exchange
-        out = routed.zipPartitions(csrZip, preservesPartitioning = false) {
-          (sIt, bIt) =>
+        out = routed.zipPartitions(csrs, preservesPartitioning = false) {
+          (sIt, cIt) =>
             packByDest(cascade(TaskContext.getPartitionId(),
-              unpackBatches(sIt), bIt.buffered.headOption,
+              unpackBatches(sIt), cIt.next(), alpha, rmax, p,
               pushAcc.add(_), remoteAcc.add(_), onMetrics), p)
         }
       }
@@ -703,14 +715,16 @@ object ForwardPush {
         store.commit(step, rowsOf(spark, ck),
           Map("totalPushes" -> totalPushes.toDouble,
             "remoteDeltas" -> remote.toDouble),
-          acc.value.asScala.toSeq, params)
+          acc.value.asScala.toSeq, Map("alpha" -> alpha.toString,
+            "rmax" -> rmax.toString, "numParts" -> p.toString))
       converged = remote == 0
       step += rounds
     }
 
     val finalState = rowsOf(spark, state).groupBy($"qid", $"vid")
       .agg(sum($"reserve").as("reserve"), sum($"residue").as("residue"))
-    val rsum = finalState.agg(sum($"residue")).as[Double].head()
+    val rsum = finalState.agg(coalesce(sum($"residue"), lit(0.0)))
+      .as[Double].head()
     Result(finalState, rsum, step, totalPushes)
   }
 
@@ -802,7 +816,8 @@ object ForwardPush {
         (b.qids(i), b.vids(i), b.reserves(i), b.residues(i)))
     }
 
-  /** Sequential, deterministic push cascade within one partition.
+  /** Sequential, deterministic push cascade within one part of the join
+    * path, either direction (the FlatCsr carries it).
     *
     * Primitive-array implementation (round 6, guide §1.2 "per-task
     * work"): the boxed form (tuple-keyed LinkedHashMap + Option-churning
@@ -818,19 +833,15 @@ object ForwardPush {
     *   - FIFO queue of slots, deposits in CSR slab order, remote sums in
     *     deposit order — float-accumulation order identical throughout;
     *   - output local-then-remote, each sorted by (qid, vid).
-    * Results are bitwise unchanged (join-vs-fast path equivalence spec +
-    * the g_ppr_join / b_push_join oracles pin this). */
+    * Results are bitwise unchanged (the push-path pin spec + the
+    * g_ppr_join / b_push_join oracles pin this). */
   private def cascade(part: Int,
                       states: Iterator[(Int, Long, Double, Double)],
-                      block: Option[CsrBlock], alpha: Double, rmax: Double,
+                      csr: FlatCsr, alpha: Double, rmax: Double,
                       p: Int, onPush: Long => Unit,
                       onRemote: Long => Unit, onMetrics: PartMetrics => Unit)
       : Iterator[(Int, Long, Double, Double)] = {
     import graft.util.Prim
-    val srcIds = block.map(_.srcIds).getOrElse(Array.empty[Long])
-    val offsets = block.map(_.offsets).getOrElse(Array.empty[Int])
-    val dsts = block.map(_.dsts).getOrElse(Array.empty[Long])
-
     val in = new Prim.PairRows(256)
     states.foreach { case (q, v, re, rs) => in.append(q, v, re, rs) }
     if (in.n == 0) { // CSR-only part with no state this superstep
@@ -859,16 +870,12 @@ object ForwardPush {
     }
     def idxOf(s: Int): Int = {
       if (degIdx(s) == -2) {
-        val r = java.util.Arrays.binarySearch(srcIds, store.vids(s))
+        val r = csr.indexOf(store.vids(s))
         degIdx(s) = if (r >= 0) r else -1
       }
       degIdx(s)
     }
-    def degOfSlot(s: Int): Int = {
-      val idx = idxOf(s)
-      if (idx >= 0) offsets(idx + 1) - offsets(idx) else 0
-    }
-    def thresholdOf(s: Int): Double = rmax * math.max(degOfSlot(s), 1)
+    def thresholdOf(s: Int): Double = rmax * csr.thresholdDeg(idxOf(s))
 
     var i = 0
     while (i < in.n) {
@@ -897,30 +904,27 @@ object ForwardPush {
       if (r > thresholdOf(s)) {
         pushes += 1
         val idx = idxOf(s)
-        val deg = if (idx >= 0) offsets(idx + 1) - offsets(idx) else 0
-        if (deg == 0) { // dangling absorbs: closed-form self-loop pushes
-          store.a(s) += r
-          store.b(s) = 0.0
-        } else {
-          store.a(s) += alpha * r
-          store.b(s) = 0.0
-          val spread = (1.0 - alpha) * r
-          val share = spread / deg
+        val absorb = csr.absorbs(idx, store.vids(s)) // as in cascadeBlock
+        store.a(s) += (if (absorb) r else alpha * r)
+        store.b(s) = 0.0
+        if (!absorb && idx >= 0) {
+          val share = (1.0 - alpha) * r / csr.divisor(idx)
           val qid = store.qids(s)
-          var e = offsets(idx)
-          val end = offsets(idx + 1)
+          var e = csr.offsets(idx)
+          val end = csr.offsets(idx + 1)
           while (e < end) {
-            val dv = dsts(e)
+            val dv = csr.dsts(e)
+            val m = share * csr.weight(e)
             if (Hashing.partOf(dv, p) == part) {
               val s2 = slotOf(qid, dv)
-              store.b(s2) += share
+              store.b(s2) += m
               if (store.b(s2) > thresholdOf(s2) && !inQ.get(s2)) {
                 queue.add(s2); inQ.set(s2)
               }
             } else {
               val rs = remoteMap.getOrInsert(qid, dv, remote.n)
               if (rs == remote.n) remote.append(qid, dv, 0.0, 0.0)
-              remote.b(rs) += share
+              remote.b(rs) += m
             }
             e += 1
           }

@@ -26,20 +26,17 @@ class BackwardPushSpec extends SparkSpec {
     } finally g.unpersistAll()
   }
 
-  test("backward fast (broadcast) and cogroup join paths agree within rsum") {
-    // mirror of the forward PushPathEquivalenceSpec: different partition
-    // ownership pushes in different orders so leftover residue lands
+  test("backward fast (broadcast) and pinned-CSR join paths agree within rsum") {
+    // mirror of the forward PushPathEquivalenceSpec: the two paths route
+    // state by different partition functions (murmur3 vs xxhash64), so
+    // they push in different orders and leftover residue lands
     // differently, but reserves must agree within the two rsum bounds
-    val rnd = new scala.util.Random(17)
-    val bigger = (Seq.tabulate(70)(i => (i % 35, (i * 13 + 5) % 35)) ++
-      Seq.fill(100)((rnd.nextInt(35), rnd.nextInt(35))))
-      .filter(e => e._1 != e._2).distinct
-    val g = graph(bigger)
+    val g = graph(equivBackward)
     try {
       val rmax = 1e-7
       val fast = BackwardPush.runFast(g, Map(0 -> 1L, 1 -> 5L), 0.2, rmax)
       val join = BackwardPush.runJoin(g, Map(0 -> 1L, 1 -> 5L), 0.2, rmax)
-      def rows(r: BackwardPush.Result) =
+      def rows(r: ForwardPush.Result) =
         r.state.orderBy("qid", "vid").collect()
           .map(x => ((x.getInt(0), x.getLong(1)), x.getDouble(2))).toMap
       val (fr, jr) = (rows(fast), rows(join))

@@ -17,6 +17,32 @@ object TestGraphs {
              valCol: String): Map[Long, Double] =
     df.select(vidCol, valCol).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** 40-vertex random graph of the forward fast/join equivalence case. */
+  lazy val equivForward: Seq[(Int, Int)] = {
+    val rnd = new scala.util.Random(5)
+    (Seq.tabulate(80)(i => (i % 40, (i * 11 + 3) % 40)) ++
+      Seq.fill(120)((rnd.nextInt(40), rnd.nextInt(40))))
+      .filter(e => e._1 != e._2).distinct
+  }
+
+  /** 35-vertex random graph of the backward fast/join equivalence case. */
+  lazy val equivBackward: Seq[(Int, Int)] = {
+    val rnd = new scala.util.Random(17)
+    (Seq.tabulate(70)(i => (i % 35, (i * 13 + 5) % 35)) ++
+      Seq.fill(100)((rnd.nextInt(35), rnd.nextInt(35))))
+      .filter(e => e._1 != e._2).distinct
+  }
+
+  /** Order-free fingerprint of a push state's raw IEEE bits: any change
+    * in a reserve or residue, down to the last ulp, moves it. */
+  def stateBits(state: org.apache.spark.sql.DataFrame): Int =
+    scala.util.hashing.MurmurHash3.seqHash(
+      state.select("qid", "vid", "reserve", "residue").collect()
+        .map(r => (r.getInt(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+        .sorted.toSeq)
 }
 
 class ForwardPushSpec extends SparkSpec {
@@ -412,11 +438,7 @@ class PushPathEquivalenceSpec extends SparkSpec {
   import TestGraphs._
 
   test("fast (broadcast-CSR) and join paths agree within the rsum bound") {
-    val rnd = new scala.util.Random(5)
-    val edges = (Seq.tabulate(80)(i => (i % 40, (i * 11 + 3) % 40)) ++
-      Seq.fill(120)((rnd.nextInt(40), rnd.nextInt(40))))
-      .filter(e => e._1 != e._2).distinct
-    val g = graph(edges)
+    val g = graph(equivForward)
     try {
       val rmax = 1e-6 / (g.numEdges + g.numVertices)
       def rows(r: graft.ops.ForwardPush.Result) =
@@ -436,6 +458,48 @@ class PushPathEquivalenceSpec extends SparkSpec {
         assert(math.abs(a._3 - b) <= bound, s"$a vs $b bound=$bound")
       }
       assert(fast.rsum <= 2e-6 && join.rsum <= 2e-6)
+    } finally g.unpersistAll()
+  }
+
+  test("both directions keep their pinned supersteps, pushes and raw-bit state on both paths") {
+    // the equivalence cases only bound fast-vs-join differences by rsum,
+    // so a cascade that reordered its float operations would pass them;
+    // the pins are the values of the per-direction cascades this engine
+    // replaced, and moving one means the float operations moved
+    def pin(r: ForwardPush.Result) =
+      (r.supersteps, r.pushes, stateBits(r.state))
+    val fwd = graph(equivForward)
+    try {
+      val rmax = 1e-6 / (fwd.numEdges + fwd.numVertices)
+      val sources = Map(0 -> 0L, 1 -> 7L)
+      assert(pin(ForwardPush.runFast(fwd, sources, 0.2, rmax)) ==
+        ((1, 3270L, 1133504589)))
+      assert(pin(ForwardPush.runJoin(fwd, sources, 0.2, rmax)) ==
+        ((64, 8694L, 1592774730)))
+    } finally fwd.unpersistAll()
+    val bwd = graph(equivBackward)
+    try {
+      val targets = Map(0 -> 1L, 1 -> 5L)
+      assert(pin(BackwardPush.runFast(bwd, targets, 0.2, 1e-7)) ==
+        ((1, 2572L, 294248057)))
+      assert(pin(BackwardPush.runJoin(bwd, targets, 0.2, 1e-7)) ==
+        ((80, 6068L, 252338991)))
+    } finally bwd.unpersistAll()
+  }
+
+  test("every push entry point answers an empty source map with an empty state and rsum 0") {
+    val g = graph(HandGraphs.triangle3 ++ Seq((0, 3), (3, 1), (1, 4)))
+    try {
+      val none = Map.empty[Int, Long]
+      Seq[(String, () => ForwardPush.Result)](
+        "ForwardPush.runFast" -> (() => ForwardPush.runFast(g, none, 0.2, 1e-6)),
+        "ForwardPush.runJoin" -> (() => ForwardPush.runJoin(g, none, 0.2, 1e-6)),
+        "BackwardPush.runFast" -> (() => BackwardPush.runFast(g, none, 0.2, 1e-6)),
+        "BackwardPush.runJoin" -> (() => BackwardPush.runJoin(g, none, 0.2, 1e-6))
+      ).foreach { case (name, run) =>
+        val r = run()
+        assert((r.state.count(), r.rsum) == ((0L, 0.0)), name)
+      }
     } finally g.unpersistAll()
   }
 
